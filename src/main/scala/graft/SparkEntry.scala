@@ -33,12 +33,21 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * Catalog contract (ADVICE r13): a query CONSTRUCTOR may execute
-    * Spark jobs. Four queries (dd_tfidf_cos, pipe_ccnet,
-    * text_langid_nb, pipe_dsir) materialize a shared derived table via
-    * `localCheckpoint()` INSIDE the constructor — column pruning
-    * re-specializes a multi-consumer subplan per consumer, which
-    * defeats AQE exchange reuse, so the barrier must exist before the
-    * plan is handed back. Consequences for tooling: (a) constructing
+    * Spark jobs. Fourteen do (jobs per construction at sf0.1, from
+    * `perfbench/refs/profile-sf0.1.tsv`):
+    *   - a shared derived table behind `localCheckpoint()`, because
+    *     column pruning re-specializes a multi-consumer subplan per
+    *     consumer, which defeats AQE exchange reuse: dd_tfidf_cos (8),
+    *     emb_mrr (6), emb_recall (6), pipe_dsir (2), pipe_ccnet (1),
+    *     text_langid_nb (1), pipe_classify_train (1);
+    *   - a loop-invariant base or a per-round result behind
+    *     `localCheckpoint()` in an unrolled iterative loop: emb_mmr
+    *     (19), emb_kcenter (15), agg_polish (14), graph_domainrank (10),
+    *     graph_ppr (7);
+    *   - ZipIndex's per-partition offset pass: rel_zip_index (3),
+    *     agg_ntile (3).
+    * Each needs its jobs done before the plan is handed back.
+    * Consequences for tooling: (a) constructing
     * such a query without acting on it still runs the checkpoint job
     * (plan-only tools like PlanDump/PLANS.md regeneration pay it);
     * (b) the checkpointed plan holds a LogicalRDD whose blocks are

@@ -104,6 +104,7 @@ object GraphQueries extends GroupBase {
     // frontier reachable in k hops, and the zero ranks never leave
     // the executors.
     "graph_ppr" -> ((s, d) => {
+      requireExchangeReuse(s, "graph_ppr")
       val (nodes, edges) = graph(s, d)
       val ns = nodes.filter(col("doc_id") % 11 === 1)
         .agg(count(lit(1)).as("ns"))
@@ -350,6 +351,7 @@ object GraphQueries extends GroupBase {
     // removes the 8-core/32-core anti-scaling the r16 driver measured
     // (fixed per-job scheduling overhead × rounds grew with cores).
     "graph_kcore" -> ((s, d) => {
+      requireExchangeReuse(s, "graph_kcore")
       val K = 3
       val (nodes, edges) = graph(s, d)
       val und = edges.select(col("src"), col("dst"))

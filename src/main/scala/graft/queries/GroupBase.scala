@@ -22,6 +22,19 @@ trait GroupBase extends QueryGroup {
     spark.sql(q)
   }
 
+  /** Fail fast unless exchange reuse is on. The barrier-free
+    * iterative graph loops (graph_kcore, graph_ppr) hand back a static
+    * plan that doubles with each round; exchange reuse (at planning
+    * time, or at runtime under AQE) keeps its repeated subtrees from
+    * executing again. Measured warm at sf0.1 on 4 cores: with reuse
+    * off graph_kcore takes 7.5 s instead of 2.1 s and graph_ppr 2.1 s
+    * instead of 1.4 s. AQE itself is not needed: with AQE off and
+    * reuse on they took 1.4 s and 1.2 s. */
+  protected def requireExchangeReuse(spark: SparkSession, query: String): Unit =
+    if (!spark.conf.get("spark.sql.exchange.reuse").toBoolean)
+      throw new IllegalStateException(s"$query relies on exchange reuse to run the " +
+        "subtrees its unrolled rounds share once; set spark.sql.exchange.reuse=true")
+
   /** Materialize a derived column behind a Generate barrier:
     * `explode(array(e))` emits exactly one row per input row with the
     * same values as `withColumn(name, e)`, but the expression lives in

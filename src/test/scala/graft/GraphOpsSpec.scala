@@ -40,6 +40,22 @@ class GraphOpsSpec extends SparkSpec {
         .filter(_ != s).distinct
     }.toMap
 
+  test("graph_kcore and graph_ppr fail fast without exchange reuse, and build without AQE") {
+    def withConf[A](key: String)(body: => A): A = {
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "false")
+      try body finally spark.conf.set(key, prev)
+    }
+    for (q <- Seq("graph_kcore", "graph_ppr")) {
+      val e = withConf("spark.sql.exchange.reuse") {
+        intercept[IllegalStateException](SparkEntry.queries(q)(spark, TestSpark.sf0001))
+      }
+      assert(e.getMessage.contains(q) &&
+        e.getMessage.contains("spark.sql.exchange.reuse=true"), e.getMessage)
+      withConf("spark.sql.adaptive.enabled")(SparkEntry.queries(q)(spark, TestSpark.sf0001))
+    }
+  }
+
   test("graph_pagerank matches a brute-force 3-round power iteration") {
     val n = 40
     val (dir, _) = writeDocs(11L, n)

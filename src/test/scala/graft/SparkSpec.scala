@@ -21,7 +21,7 @@ object TestSpark {
       // with the process-global SparkContext, so the confs must be here
       .config("spark.ui.enabled", "true")
       .config("spark.ui.port", "0")
-    val sess = graft.core.Sessions.prometheusConfs
+    val sess = (graft.core.Sessions.streamingConfs ++ graft.core.Sessions.prometheusConfs)
       .foldLeft(s) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     sess.sparkContext.setLogLevel("WARN")

@@ -5,6 +5,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Checkpoint/recovery (§2.11: checkpointing + exactly-once state) and
   * stream-static join (broadcast-state pattern,
@@ -16,29 +17,65 @@ class CheckpointSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val input = MemoryStream[KeyedEvent]
-    val agg = input.toDS().groupBy("key")
-      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_v"))
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    // (confs for both runs, confs for the run that writes the checkpoint);
+    // the restart always runs under the engine's own confs
+    val inputs = Seq(
+      (Nil, Nil),
+      // upgrade: RocksDB state written by Spark's default file manager
+      // without changelog checkpointing
+      (Seq(provider -> Some(
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")),
+        Seq(LocalCheckpointFileManager.ConfKey -> None, changelog -> Some("false"))))
+    for (((both, firstOnly), i) <- inputs.zipWithIndex) withConfs(both) {
+      val ckpt = Files.createTempDirectory("graft-ckpt")
+      val input = MemoryStream[KeyedEvent]
+      val agg = input.toDS().groupBy("key")
+        .agg(count(lit(1)).as("cnt"), sum("value").as("sum_v"))
+      def start(name: String) = agg.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(OutputMode.Complete()).start()
 
-    input.addData(KeyedEvent(1L, ts(1000L), "a", 1.0),
-      KeyedEvent(1L, ts(2000L), "a", 2.0))
-    val q1 = agg.writeStream.format("memory").queryName("ck1")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Complete()).start()
-    try { q1.processAllAvailable() } finally q1.stop()
+      input.addData(KeyedEvent(1L, ts(1000L), "a", 1.0),
+        KeyedEvent(1L, ts(2000L), "a", 2.0))
+      withConfs(firstOnly) {
+        val q1 = start(s"ck1_$i")
+        try { q1.processAllAvailable() } finally q1.stop()
+      }
 
-    // restart from the same checkpoint: prior state must survive
-    input.addData(KeyedEvent(1L, ts(3000L), "a", 4.0))
-    val q2 = agg.writeStream.format("memory").queryName("ck2")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Complete()).start()
-    try {
-      q2.processAllAvailable()
-      val row = spark.table("ck2").filter(col("key") === 1L).collect().head
-      assert(row.getLong(1) == 3L, s"count lost across restart: $row")
-      assert(row.getDouble(2) == 7.0)
-    } finally q2.stop()
+      // restart from the same checkpoint: prior state must survive
+      input.addData(KeyedEvent(1L, ts(3000L), "a", 4.0))
+      val q2 = start(s"ck2_$i")
+      try {
+        q2.processAllAvailable()
+        val row = spark.table(s"ck2_$i").filter(col("key") === 1L).collect().head
+        assert(row.getLong(1) == 3L, s"count lost across restart: $row")
+        assert(row.getDouble(2) == 7.0)
+      } finally q2.stop()
+      if (firstOnly.nonEmpty) {
+        // the runs really differ: Hadoop's writer leaves .crc files,
+        // the engine's manager does not, and only changelog
+        // checkpointing writes .changelog files
+        val offsets = ckpt.resolve("offsets")
+        assert(Files.exists(offsets.resolve(".0.crc")))
+        assert(Files.exists(offsets.resolve("1")) && !Files.exists(offsets.resolve(".1.crc")))
+        val state = Files.walk(ckpt.resolve("state"))
+        try assert(state.iterator().asScala.exists(_.getFileName.toString.endsWith(".changelog")))
+        finally state.close()
+      }
+    }
+  }
+
+  /** Set (Some) or unset (None) session confs around `body`. */
+  private def withConfs(confs: Seq[(String, Option[String])])(body: => Unit): Unit = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    def set(kvs: Seq[(String, Option[String])]): Unit = kvs.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    set(confs)
+    try body finally set(prev)
   }
 
   test("CEP partial-match state survives a query restart (checkpointed NFA)") {
