@@ -16,9 +16,7 @@ import graft.core.{Exact, ExactSql}
   */
 object TextQueries extends GroupBase {
 
-  // private[graft]: the Scratch profiling harness mirrors query
-  // bodies and must reference THIS list, not a copy that can drift
-  private[graft] val stopwords = Seq("the", "a", "and", "of")
+  private val stopwords = Seq("the", "a", "and", "of")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // per-doc token/char stats (token counting, SURVEY north-star)

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.Row
 import graft.SparkEntry
-import graft.core.Sessions
+import graft.core.{Sessions, Tables}
 
 /** Partition-invariance gate: every catalog query must produce the
   * same result (as an unordered multiset of rows) under two radically
@@ -50,7 +50,7 @@ object PartInvariance {
     graft.Bench.warmJvm(spark)
 
     val dir = java.nio.file.Files.createTempDirectory("graft-parts").toString
-    EdgeExec.tables.foreach { tbl =>
+    Tables.all.foreach { tbl =>
       spark.read.parquet(s"$sfDir/$tbl.parquet")
         .repartition(13)
         .write.mode("overwrite").parquet(s"$dir/$tbl.parquet")

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.core.Sessions
+import graft.core.{Sessions, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -76,7 +76,7 @@ object Scaling30 {
     graft.Bench.warmJvm(spark)
 
     val dir = java.nio.file.Files.createTempDirectory("graft-sc30").toString
-    EdgeExec.tables.foreach { tbl =>
+    Tables.all.foreach { tbl =>
       val src = spark.read.parquet(s"$base/$tbl.parquet")
       val out = KeyCols.get(tbl) match {
         case Some(ks) => extend(src, ks, Copies)

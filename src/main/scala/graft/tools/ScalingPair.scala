@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.core.Sessions
+import graft.core.{Sessions, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -254,7 +254,7 @@ object ScalingPair {
   private def runProbe(spark: SparkSession, small: String, base: String,
                        parent: String, dataRatio: Double): Boolean = {
     val dir = s"$parent/x3"
-    EdgeExec.tables.foreach { tbl =>
+    Tables.all.foreach { tbl =>
       val src = spark.read.parquet(s"$base/$tbl.parquet")
       extendTable(src, tbl).write.mode("overwrite").parquet(s"$dir/$tbl.parquet")
     }

@@ -27,7 +27,7 @@ object StaleCheck {
     "SKEW_EXEC.json", "SHAPE_EXEC.json", "HUGE_EXEC.json",
     "PART_INVARIANCE.json", "CODEGEN_PARITY.json", "scaling.json",
     "scaling30.json", "scaling_pair.json", "STATE_SIZE.json",
-    "bench_full.json", "CONC_EXEC.json", "MEM_EXEC.json")
+    "bench_full.json", "CONC_EXEC.json", "MEM_EXEC.json", "FULLEXEC.json")
 
   private def sh(cmd: String*): (Int, String) = {
     val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
@@ -64,15 +64,10 @@ object StaleCheck {
 
   def main(args: Array[String]): Unit = {
     val outJson = if (args.length > 0) args(0) else "STALECHECK.json"
-    // latest FULLEXEC_r*.json joins the fixed list
-    val fullexec = Option(new java.io.File(".").listFiles()).toSeq.flatten
-      .map(_.getName).filter(_.matches("FULLEXEC_r\\d+\\.json"))
-      .sortBy(n => "\\d+".r.findFirstIn(n).get.toInt).lastOption
-    val artifacts = fixed ++ fullexec
     // uncommitted src changes make EVERY artifact unattestable
     val dirty = sh("git", "status", "--porcelain", "--",
       "src/main", "build.sbt")._2
-    val results = artifacts.map { a =>
+    val results = fixed.map { a =>
       a -> (if (dirty.nonEmpty)
               Some("working tree has uncommitted src/main changes")
             else staleness(a))

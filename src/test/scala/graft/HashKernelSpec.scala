@@ -106,7 +106,7 @@ class HashKernelSpec extends SparkSpec {
     // equal); pinned here over the full hostile pool + raw bytes.
     val s = spark
     import s.implicits._
-    val hostile = graft.tools.TextExec.pool.map(p => s"w1 $p w3 w4")
+    val hostile = graft.tools.Sweep.textPool.map(p => s"w1 $p w3 w4")
     val raw = Seq(Array[Byte](0x61, 0xC3.toByte, 0x28, 0x62, 0x20,
       0x74, 0x6F, 0x6B, 0x20, 0x77, 0x32, 0x20, 0x77, 0x33))
       .toDF("b").selectExpr("CAST(b AS STRING) AS text")

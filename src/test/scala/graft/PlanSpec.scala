@@ -174,7 +174,7 @@ class PlanSpec extends SparkSpec {
         "expectedCollect" -> graft.tools.PlanAudit.expectedCollect,
         "expectedGlobalWin" -> graft.tools.PlanAudit.expectedGlobalWin,
         "expectedExplodeWin" -> graft.tools.PlanAudit.expectedExplodeWin,
-        "skewBoundOverrides" -> graft.tools.SkewExec.BoundOverrides.keySet)) {
+        "skewBoundOverrides" -> graft.tools.Sweep.SkewBoundOverrides.keySet)) {
       val dead = wl -- live
       assert(dead.isEmpty, s"$label references non-existent queries: $dead")
     }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Regression pins for the round-10 degenerate-input fixes (the
-  * in-test twin of the EdgeExec artifact sweeps): every query that
+  * in-test twin of the edge-axis `Sweep` artifacts): every query that
   * ever crashed on a degenerate input runs here against exactly that
   * input and must complete. Degenerate inputs are NOT errors for an
   * analytics engine — a filter that matches nothing, a single row, a
@@ -20,7 +20,7 @@ class RobustnessSpec extends SparkSpec {
   private def cloneDir(n: Int,
                        mutate: Map[String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = Map.empty): String = {
     val dir = java.nio.file.Files.createTempDirectory(s"graft-rob$n").toString
-    graft.tools.EdgeExec.tables.foreach { tbl =>
+    graft.core.Tables.all.foreach { tbl =>
       val base = spark.read.parquet(s"$schemaDir/$tbl.parquet").limit(n)
       mutate.getOrElse(tbl, identity[org.apache.spark.sql.DataFrame] _)(base)
         .write.mode("overwrite").parquet(s"$dir/$tbl.parquet")
@@ -183,9 +183,9 @@ class RobustnessSpec extends SparkSpec {
     // Exact.finiteOrNull (undefined bucket reads NULL) and IEEE shadow
     // sums in the UDAF.
     val dir = cloneDir(60,
-      graft.tools.EdgeExec.tables.map(t => t ->
+      graft.core.Tables.all.map(t => t ->
         ((df: org.apache.spark.sql.DataFrame) =>
-          graft.tools.NanExec.corrupt(df, t))).toMap)
+          graft.tools.Sweep.corruptNan(df, t))).toMap)
     mustRun(dir, Seq("join_range", "rel_retract_log", "rel_scd2",
       "agg_weighted_avg"))
   }
@@ -200,9 +200,9 @@ class RobustnessSpec extends SparkSpec {
     // URL (fn_convert), and OOM join_fuzzy's candidate build (O(L²)
     // delete-variant bytes per 60 KB name — now prefix-bounded).
     val dir = cloneDir(60,
-      graft.tools.EdgeExec.tables.map(t => t ->
+      graft.core.Tables.all.map(t => t ->
         ((df: org.apache.spark.sql.DataFrame) =>
-          graft.tools.TextExec.corrupt(df, t))).toMap)
+          graft.tools.Sweep.corruptText(df, t))).toMap)
     mustRun(dir, Seq("text_quality", "pipe_classify", "pipe_budget",
       "pipe_zorder", "text_jsd", "pipe_unimax", "fn_convert", "join_fuzzy"))
   }
@@ -219,9 +219,9 @@ class RobustnessSpec extends SparkSpec {
     // INVALID_INDEX_OF_ZERO from signed % as an array index (mm_* —
     // now pmod), and CAST_OVERFLOW on an unclamped bucket (pipe_zorder).
     val dir = cloneDir(60,
-      graft.tools.EdgeExec.tables.map(t => t ->
+      graft.core.Tables.all.map(t => t ->
         ((df: org.apache.spark.sql.DataFrame) =>
-          graft.tools.NumExec.corrupt(df, t))).toMap)
+          graft.tools.Sweep.corruptNum(df, t))).toMap)
     mustRun(dir, Seq("graph_pagerank", "graph_triangles", "emb_ivf_assign",
       "emb_semdedup", "emb_triplets", "mm_manifest", "over_sum_distinct",
       "pipe_split", "pipe_groupsplit", "pipe_zorder", "fn_math", "fn_nested"))

@@ -259,18 +259,26 @@ class ScalingSpec extends SparkSpec {
         .filter(pmod(xxhash64(col("a") * lit(1000003L) + col("a")), lit(1000)) < 499)
 
     // Self-calibrate against machine speed: grow n until the SMALL
-    // quadratic run is compute-dominated (>= 0.4 s), so fixed job
-    // overhead can't compress the measured ratio below the threshold.
+    // quadratic run is compute-dominated, so fixed job overhead can't
+    // compress the measured ratio below the threshold. A run takes
+    // fixed cost f plus pair work w, and 0.4 s alone does not make
+    // w dominate: on a 4-core host f was ~0.25 s, and 0.40 s / 2.60 s
+    // at n=4000 read 6.5x. So measure f once on a trivially small
+    // quadratic and require the small run to reach 4f (w >= 3f), which
+    // bounds the ratio below at (f + 16*3f) / 4f = 12.25x.
     // Expected ratios: quadratic ~dataRatio^2 = 16x vs threshold 8x;
     // linear ~dataRatio = 4x. Both margins are 2x.
+    val fixedCost = ScalingProbe.timeOnce(quadratic(16))
+    val minSmall = math.max(0.4, 4 * fixedCost)
     def measureQuadratic(): (Long, Double, Double) = {
       var n = 2000L
       var tSmallQ = ScalingProbe.timeOnce(quadratic(n))
-      while (tSmallQ < 0.4 && n < 64000L) {
+      while (tSmallQ < minSmall && n < 64000L) {
         n *= 2
         tSmallQ = ScalingProbe.timeOnce(quadratic(n))
       }
-      assert(tSmallQ >= 0.4, s"calibration failed: $tSmallQ s at n=$n")
+      assert(tSmallQ >= minSmall,
+        s"calibration failed: $tSmallQ s at n=$n (fixed cost $fixedCost s)")
       (n, tSmallQ, ScalingProbe.timeOnce(quadratic((n * dataRatio).toLong)))
     }
     // ONE retry: a scheduler stall during the small run inflates
@@ -281,6 +289,7 @@ class ScalingSpec extends SparkSpec {
     var meas = measureQuadratic()
     if (!ScalingProbe.isFlagged(meas._3 / meas._2, meas._3, dataRatio)) {
       val first = meas
+      info(f"retrying: first attempt n=${first._1} small ${first._2}%.2fs large ${first._3}%.2fs not flagged")
       meas = measureQuadratic()
       // retry-path sanity (ADVICE r15): the retry halves the test's
       // sensitivity by design, so pin that the retry's small run is
@@ -296,6 +305,7 @@ class ScalingSpec extends SparkSpec {
     }
     val (n, tSmallQ, tLargeQ) = meas
     val qRatio = tLargeQ / tSmallQ
+    info(f"fixed cost $fixedCost%.2fs; n=$n small $tSmallQ%.2fs large $tLargeQ%.2fs ratio $qRatio%.1fx")
     assert(ScalingProbe.isFlagged(qRatio, tLargeQ, dataRatio),
       f"quadratic probe NOT flagged twice: small $tSmallQ%.2fs large $tLargeQ%.2fs ratio $qRatio%.1fx (threshold ${2 * dataRatio}%.0fx) — the scaling gate cannot fire")
 

@@ -24,7 +24,7 @@ class ShapeDriftSpec extends SparkSpec {
       (3L, Array.empty[Float], 0) // failed encode -> code 0
     )
     val dir = java.nio.file.Files.createTempDirectory("graft-shapepin").toString
-    graft.tools.EdgeExec.tables.foreach { tbl =>
+    graft.core.Tables.all.foreach { tbl =>
       if (tbl == "embeddings")
         vecs.toDF("vec_id", "embedding", "label")
           .write.mode("overwrite").parquet(s"$dir/$tbl.parquet")

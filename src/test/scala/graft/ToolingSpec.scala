@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Unit pins for the round-12 instruments: the median-of-probe-ratios
   * host calibration (Bench.hostScale) and the huge-value corruption
-  * generator (HugeExec.corrupt). Both adjudicate other results —
+  * generator (Sweep.corruptHuge). Both adjudicate other results —
   * a drift instrument that over-corrects or a sweep that silently
   * corrupts nothing would invalidate conclusions downstream, so their
   * own contracts get direct tests.
@@ -213,15 +213,43 @@ class ToolingSpec extends SparkSpec {
         s"from a calm full run): ${missing.mkString(",")}")
   }
 
+  test("Sweep.run: ok, error and slow statuses, escaped JSON, failure count") {
+    // the one per-query loop of all ten corruption sweeps: a thrown
+    // message quoting a hostile cell (NUL, ESC) must still produce an
+    // artifact a strict parser accepts, and both an error and a bound
+    // crossing must count as failures
+    val axis = graft.tools.Sweep.Axis("TEST_SWEEP.json", "test-sweep",
+      (df, _) => df, timed = true,
+      bound = Some(Map("over_bound" -> 1e-6).getOrElse(_, 1e6)))
+    val queries: Seq[(String, graft.tools.Sweep.QueryFn)] = Seq(
+      "fine" -> ((s, _) => s.range(3).toDF("a")),
+      "throws" -> ((_, _) =>
+        throw new IllegalStateException("bad cell a\u0000b\u001b[0m")),
+      "over_bound" -> ((s, _) => s.range(2).toDF("a")))
+    val (json, failed) = graft.tools.Sweep.run(spark, "test", axis,
+      "/no/schema", "/no/clones", queries)
+    assert(failed == 2)
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(root.path("action").asText == "test-sweep")
+    assert(root.path("n_queries").asInt(-1) == 3)
+    assert(root.path("n_failed").asInt(-1) == 2)
+    assert(root.path("host_scale").asDouble(-1) == 1.0)
+    val q = root.path("queries")
+    assert(q.path("fine").asText.matches("ok:3:[0-9.]+s"), q)
+    assert(q.path("throws").asText ==
+      "error: IllegalStateException: bad cell a\u0000b\u001b[0m", q)
+    assert(q.path("over_bound").asText.matches("slow:2:[0-9.]+s>bound:1.0E-6"), q)
+  }
+
   test("HugeExec.corrupt inflates the advertised columns, deterministically") {
     val s = spark
     import s.implicits._
     val emb = (0L until 64L).map(i =>
       (i, Array.tabulate(8)(j => (i + j).toFloat), i.toInt % 3))
       .toDF("vec_id", "embedding", "label")
-    val c1 = graft.tools.HugeExec.corrupt(emb, "embeddings").collect()
+    val c1 = graft.tools.Sweep.corruptHuge(emb, "embeddings").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).length)).sortBy(_._1)
-    val c2 = graft.tools.HugeExec.corrupt(emb, "embeddings").collect()
+    val c2 = graft.tools.Sweep.corruptHuge(emb, "embeddings").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).length)).sortBy(_._1)
     assert(c1.toList == c2.toList, "corruption mask must be deterministic")
     val padded = c1.filter(_._2 == 4096)
@@ -230,7 +258,7 @@ class ToolingSpec extends SparkSpec {
     // documents: text inflated to >= target on masked rows only
     val docs = (0L until 64L).map(i => (i, s"doc body $i", "en"))
       .toDF("doc_id", "text", "lang")
-    val lens = graft.tools.HugeExec.corrupt(docs, "documents").collect()
+    val lens = graft.tools.Sweep.corruptHuge(docs, "documents").collect()
       .map(r => r.getString(1).length)
     assert(lens.exists(_ >= 500000), "no 500KB doc in 64 rows")
     assert(lens.count(_ < 100) > lens.count(_ >= 500000), "most docs nominal")
@@ -238,7 +266,7 @@ class ToolingSpec extends SparkSpec {
     // under Jackson's nesting cap) and the original key reads null
     val ev = (0L until 64L).map(i => (i, i % 7, s"""{"k":$i}"""))
       .toDF("event_id", "user_id", "props")
-    val deep = graft.tools.HugeExec.corrupt(ev, "events")
+    val deep = graft.tools.Sweep.corruptHuge(ev, "events")
       .filter(length(col("props")) > 1000)
     assert(deep.count() > 0, "no deep-nested props in 64 rows")
     val parsed = deep.select(

@@ -14,16 +14,16 @@ run() {
   fi
   log "done: $1"
 }
-run EdgeExec      "graft.tools.EdgeExec"                                               "\[edgeexec\]"
-run EdgeExec1     "graft.tools.EdgeExec /root/testdata/sf0.001 EDGE_EXEC_1ROW.json 1"  "\[edgeexec\]"
-run NullExec      "graft.tools.NullExec"                                               "\[nullexec\]"
-run NanExec       "graft.tools.NanExec"                                                "\[nanexec\]"
-run TextExec      "graft.tools.TextExec"                                               "\[textexec\]"
-run NumExec       "graft.tools.NumExec"                                                "\[numexec\]"
-run ComboExec     "graft.tools.ComboExec"                                              "\[comboexec\]"
-run SkewExec      "graft.tools.SkewExec"                                               "\[skewexec\]"
-run ShapeExec     "graft.tools.ShapeExec"                                              "\[shapeexec\]"
-run HugeExec      "graft.tools.HugeExec"                                               "\[hugeexec\]"
+run edge          "graft.tools.Sweep edge"                                               "\[sweep\] edge:"
+run edge1         "graft.tools.Sweep edge /root/testdata/sf0.001 EDGE_EXEC_1ROW.json 1"  "\[sweep\] edge:"
+run null          "graft.tools.Sweep null"                                               "\[sweep\] null:"
+run nan           "graft.tools.Sweep nan"                                                "\[sweep\] nan:"
+run text          "graft.tools.Sweep text"                                               "\[sweep\] text:"
+run num           "graft.tools.Sweep num"                                                "\[sweep\] num:"
+run combo         "graft.tools.Sweep combo"                                              "\[sweep\] combo:"
+run skew          "graft.tools.Sweep skew"                                               "\[sweep\] skew:"
+run shape         "graft.tools.Sweep shape"                                              "\[sweep\] shape:"
+run huge          "graft.tools.Sweep huge"                                               "\[sweep\] huge:"
 run PartInvariance "graft.tools.PartInvariance"                                        "\[partinv\]"
 log "start: ConcExec (4g heap, 8 cores, determinism+contention)"
 if ! SPARK_DRIVER_MEM=4g SPARK_GRAFT_CPUS=8 \
@@ -38,7 +38,7 @@ if ! SPARK_DRIVER_MEM=2g SPARK_GRAFT_CPUS=8 \
 fi
 log "done: MemExec"
 run CodegenParity "graft.tools.CodegenParity /root/testdata/sf0.01 CODEGEN_PARITY.json" "parity|\[codegen"
-run FullExec      "graft.tools.FullExec /root/testdata/sf0.1 FULLEXEC_r15.json"        "\[fullexec\]"
+run FullExec      "graft.tools.FullExec /root/testdata/sf0.1 FULLEXEC.json"            "\[fullexec\]"
 run ScalingProbe  "graft.tools.ScalingProbe"                                           "\[scaling|scaling.json"
 run Scaling30     "graft.tools.Scaling30"                                              "\[scaling30\]"
 run ScalingPair   "graft.tools.ScalingPair"                                            "\[scalingpair\]"
