@@ -5,6 +5,9 @@ import graft.core.Sessions
 /** Bench main: runs every registered query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line the
   * driver parses into BENCH_r{N}.json.
+  * Every reading is raw wall-clock seconds; comparing one commit with
+  * another is `perfbench`'s job (paired parent/change runs), not this
+  * tool's.
   *
   * `count()` is the benched action: it executes the full plan
   * (shuffles, joins, window functions) without paying collect/IO cost
@@ -38,123 +41,54 @@ object Bench {
     try spark.range(1000000).selectExpr("sum(id)").collect()
     catch { case _: Throwable => () }
 
-  /** Host-calibration micro-suite: three DATA-INDEPENDENT probes over
-    * `spark.range` (no testdata IO) that measure what this host+JVM
-    * deliver right now — raw codegen CPU, one canonical 32-partition
-    * shuffle, one codegen window. Each probe is warmed once and timed
-    * 3×, median kept, so the block costs ~2 s total. The suite runs it
-    * BEFORE and AFTER the catalog: cross-round bench deltas can then be
-    * read in calibrated terms (r9→r10's +17% was adjudicated as host
-    * drift from a controlled experiment that lived only in prose —
-    * this block makes that attribution a committed, re-derivable
-    * artifact), and start-vs-end disagreement exposes drift WITHIN a
-    * run. Guarded like the warm-up: a probe failure reports -1 and
-    * never kills the bench. */
-  private[graft] def calibrate(spark: org.apache.spark.sql.SparkSession): Seq[(String, Double)] = {
-    import org.apache.spark.sql.functions.sum
-    def probe(body: => Unit): Double =
-      try {
-        body // warm: codegen + JIT off the clock, like the catalog queries
-        val ts = Seq.fill(3) {
-          val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-        }
-        ts.sorted.apply(1)
-      } catch { case _: Throwable => -1.0 }
-    Seq(
-      "cal_cpu" -> probe {
-        // mask before summing: an unmasked 128M-row sum of raw hash
-        // longs overflows and ANSI mode (session default) throws
-        spark.range(128000000L)
-          .selectExpr("sum(xxhash64(id) & 1048575) AS s").collect()
-      },
-      "cal_shuffle" -> probe {
-        spark.range(8000000L)
-          .selectExpr("pmod(xxhash64(id), 4096) AS k", "id AS v")
-          .groupBy("k").agg(sum("v").as("sv"))
-          .selectExpr("sum(k * sv) AS s").collect()
-      },
-      "cal_window" -> probe {
-        spark.range(8000000L)
-          .selectExpr("pmod(id, 4096) AS k", "id AS v")
-          .selectExpr("k", "sum(v) OVER (PARTITION BY k ORDER BY v) AS rs")
-          .selectExpr("sum(rs) AS s").collect()
-      })
-  }
-
-  /** Reference calibration total (round 11, kept only so CalProbe and
-    * old notes can still show the legacy sum-based ratio). The r11
-    * driver run proved the SUM aggregate non-robust: one anomalous
-    * window probe (6.07 s vs 0.64 s calm, persistent start AND end)
-    * produced host_scale 4.711 and value_cal 21.6 s while per-query
-    * raws moved ~1.05× — the drift instrument over-corrected exactly
-    * when one probe misbehaved. host_scale is now the MEDIAN of
-    * per-probe ratios against `CalRefProbes`. */
-  private[graft] val CalRef = 1.45
-
-  /** Per-probe references: the calm round-11 CalProbe steady state on
-    * this container (min of the committed calm run's start/end blocks
-    * — min discards the start block's residual JIT, ADVICE r11). */
-  private[graft] val CalRefProbes: Map[String, Double] = Map(
-    "cal_cpu" -> 0.092, "cal_shuffle" -> 0.268, "cal_window" -> 0.639)
-
-  /** Robust host scale: per-probe ratio min(start,end)/ref, median
-    * across probes. min-of-runs discards one-sided JIT/GC residue
-    * inside a run; the median discards a whole misbehaving probe
-    * (replaying the r11 driver numbers: ratios 0.74/1.17/9.02 →
-    * host_scale 1.17, vs the garbage 4.711 the sum produced). Returns
-    * -1 when no probe succeeded in both blocks. */
-  private[graft] def hostScale(start: Seq[(String, Double)],
-                               end: Seq[(String, Double)]): Double = {
-    val e = end.toMap
-    val ratios = start.collect {
-      case (k, s) if CalRefProbes.contains(k) =>
-        val best = Seq(s, e.getOrElse(k, -1.0)).filter(_ >= 0)
-        if (best.isEmpty) -1.0 else best.min / CalRefProbes(k)
-    }.filter(_ > 0).sorted
-    if (ratios.isEmpty) -1.0
-    // true median: average the two middle elements for even n. The old
-    // upper-median meant a dead probe (2 ratios left) always surfaced
-    // the LARGER ratio — conservative for value_cal but anti-
-    // conservative for SkewExec's bounds, which divide by this scale
-    // (ADVICE r12).
-    else if (ratios.size % 2 == 1) ratios(ratios.size / 2)
-    else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2.0
-  }
-
   /** Suspect-retime thresholds: a query is retimed when it ran slower
-    * than `SuspectFactor ×` its committed calm reference
-    * (host-scale-adjusted) AND exceeded it by an absolute slack (so a
-    * 0.05 s query tripling to 0.15 s of scheduler noise never
-    * triggers). `MaxRetimes` bounds the pass on a globally-melting
-    * host — excess sorted worst-first so the biggest outliers always
-    * get their second reading. */
+    * than `SuspectFactor ×` its committed calm reference AND exceeded
+    * it by an absolute slack (so a 0.05 s query tripling to 0.15 s of
+    * scheduler noise never triggers). `MaxRetimes` bounds the pass on a
+    * globally-melting host — excess sorted worst-first so the biggest
+    * outliers always get their second reading. */
   private[graft] val SuspectFactor = 3.0
   private[graft] val SuspectSlackSec = 0.75
   private[graft] val MaxRetimes = 15
 
-  /** Names to re-time, worst absolute excess first. `scaleOf` gives
-    * each query ITS OWN host scale — since r16 the segment-localized
-    * scale from the query's bracketing calibration blocks (the r15
-    * driver run proved the whole-run scale over-credits a localized
-    * degradation by ~35%: endpoint probes priced the entire run for
-    * an excursion the segment data placed in 2 of 6 blocks). Floored
-    * at 1 internally — a fast host must not shrink the calm
-    * references. Unknown names (no committed ref) and failed queries
-    * (-1) are never suspects. */
-  private[graft] def suspectsOf(results: Seq[(String, Double)],
-                                scaleOf: String => Double): Seq[String] =
+  /** Names to re-time, worst absolute excess over the ref first.
+    * Unknown names (no committed ref) and failed queries (-1) are never
+    * suspects. */
+  private[graft] def suspectsOf(results: Seq[(String, Double)]): Seq[String] =
     results.collect {
-      case (name, sec) if sec >= 0 && BenchRefs.calm.get(name).exists { ref =>
-        val floor = math.max(1.0, scaleOf(name))
-        sec > SuspectFactor * ref * floor && sec > ref * floor + SuspectSlackSec
-      } => name -> (sec - BenchRefs.calm(name) * math.max(1.0, scaleOf(name)))
+      case (name, sec) if sec >= 0 && BenchRefs.calm.get(name).exists(ref =>
+        sec > SuspectFactor * ref && sec > ref + SuspectSlackSec) =>
+        name -> (sec - BenchRefs.calm(name))
     }.sortBy(-_._2).take(MaxRetimes).map(_._1)
 
-  /** Whole-run-scale convenience (unit tests, callers without
-    * segment data). */
-  private[graft] def suspectsOf(results: Seq[(String, Double)],
-                                scale: Double): Seq[String] =
-    suspectsOf(results, (_: String) => scale)
+  /** Stdout-line budget for the `queries` entries. Retime entries spend
+    * from the same budget, so a 15-retime degraded run can't push the
+    * line past the ~2 KB stdout tail the JSON line is parsed from. */
+  private val LineBudget = 1200
+
+  /** The run's two artifacts from its readings (-1 = failed) and its
+    * retime readings: the full bench_full.json document (every query,
+    * run order) and the budget-capped stdout line (slowest first).
+    * `value` sums the non-negative readings; `value_retimed` replaces
+    * each retimed query by its better reading. `prov` is spliced in
+    * verbatim (Provenance.jsonFields). */
+  private[graft] def renderJson(results: Seq[(String, Double)],
+                                retimed: Seq[(String, Double)],
+                                sf: String, prov: String): (String, String) = {
+    def entry(kv: (String, Double)) = "\"" + kv._1 + "\":" + fmt3(kv._2)
+    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val retimedMap = retimed.toMap
+    val totalRetimed = results.collect { case (n, v) if v >= 0 =>
+      retimedMap.get(n).filter(r => r >= 0 && r < v).getOrElse(v)
+    }.sum
+    val head = s""""metric":"total","value":${fmt3(total)},"unit":"sec","n_queries":${results.size},"retimed":${retimed.map(entry).mkString("{", ",", "}")},"value_retimed":${fmt3(totalRetimed)}"""
+    val budget = math.max(400, LineBudget - retimed.map(entry(_).length + 1).sum)
+    val bySlow = results.sortBy(-_._2).map(entry)
+    val fits = bySlow.scanLeft(0)(_ + _.length + 1).tail.takeWhile(_ <= budget).size
+    def doc(entries: Seq[String]) =
+      s"""{$head,"queries":${entries.mkString("{", ",", "}")},"sf":$sf,$prov}"""
+    (doc(results.map(entry)), doc(bySlow.take(fits)))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -202,178 +136,49 @@ object Bench {
     // compiled plan no matter how the cache is sized.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
     val doWarm = new java.io.File(warmDir).isDirectory
-    // Interleaved calibration (r14 verdict #3): the window-probe
-    // pathology recurred four rounds running (one probe degrading
-    // 4-9x between the start and end blocks), and two end-point
-    // blocks cannot localize WHEN the host degraded — the whole-run
-    // host_scale absorbs the error (r14: 67.0 value_cal vs 74.8/82.4
-    // same-code). A ~2 s probe block every `SegmentEvery` queries
-    // splits the run into segments, each normalized by its OWN
-    // bracketing blocks (min-of-endpoints per probe, median across
-    // probes — the hostScale discipline), so a mid-run excursion
-    // re-prices only the queries it actually co-ran with.
-    // `value_cal_seg` is the HEADLINE drift-normalized number as of
-    // r16 (the r15 driver run proved the whole-run host_scale
-    // over-credits localized degradation by ~35%: value_cal 64.1 s vs
-    // value_cal_seg 98.2 s on the same run, with the excursion
-    // localized to 2 of 6 blocks); `value_cal` keeps its historical
-    // definition (start/end blocks only) as a SECONDARY for
-    // cross-round comparability.
-    val SegmentEvery = 50
-    val calBlocks =
-      scala.collection.mutable.ListBuffer.empty[(Int, Seq[(String, Double)])]
-    calBlocks += 0 -> calibrate(spark)
-    val ordered = selected.toSeq.sortBy(_._1)
-    val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
+    // Pay accumulated GC debt OUTSIDE the timed window: with one timed
+    // run per query in a single long session, a collection triggered
+    // by query N's garbage otherwise lands in query N+1's measurement
+    // (r4 showed sub-second queries doubling purely from suite
+    // position; isolated runs matched r3).
+    def time(name: String): Double = {
+      System.gc()
+      val t0 = System.nanoTime()
+      try { selected(name)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
+    }
+    val results = selected.keys.toSeq.sorted.map { name =>
       if (doWarm)
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      // Pay accumulated GC debt OUTSIDE the timed window: with one
-      // timed run per query in a single long session, a collection
-      // triggered by query N's garbage otherwise lands in query N+1's
-      // measurement (r4 showed sub-second queries doubling purely from
-      // suite position; isolated runs matched r3).
-      System.gc()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if ((i + 1) % SegmentEvery == 0 && (i + 1) < ordered.size)
-        calBlocks += (i + 1) -> calibrate(spark)
-      name -> (if (ok) sec else -1.0)
+        try selected(name)(spark, warmDir).count() catch { case _: Throwable => () }
+      name -> time(name)
     }
-    calBlocks += ordered.size -> calibrate(spark)
-    val calStart = calBlocks.head._2
-    val calEnd = calBlocks.last._2
-    // per-segment scales: segment k spans queries [from, to) and is
-    // normalized by its two bracketing probe blocks
-    val segScales = calBlocks.toSeq.sliding(2).collect {
-      case Seq((a, pa), (b, pb)) if b > a =>
-        val segTotal = results.slice(a, b).collect { case (_, v) if v >= 0 => v }.sum
-        (a, b, hostScale(pa, pb), segTotal)
-    }.toSeq
-    // a dead mid-run block (all three of its probes failed) degrades
-    // ITS segments to the whole-run scale instead of discarding the
-    // segment-localized headline for the entire run — the artifact
-    // still shows which segment fell back via its recorded scale
-    // (review finding r15)
-    val wholeRunScale = hostScale(calStart, calEnd)
-    val valueCalSeg =
-      if (segScales.nonEmpty &&
-          segScales.forall(s => s._3 > 0 || wholeRunScale > 0))
-        segScales.map { case (_, _, sc, st) =>
-          st / (if (sc > 0) sc else wholeRunScale) }.sum
-      else -1.0
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    // Suspect-retime pass (r12 verdict task #1): a single-query
+    // excursion in a flaky container — BENCH_r12's 18 s dd_tfidf_cos,
+    // really 3.8 s warm — is indistinguishable in the artifact from a
+    // real 8x regression. Any query slower than 3x its committed calm
+    // reference (BenchRefs.calm) re-runs ONCE, warm, same GC
+    // discipline, and BOTH readings ship: `queries` keeps the first
+    // reading, `retimed` carries the second, and `value_retimed` is the
+    // total with each suspect replaced by its better reading — a real
+    // regression reproduces in the retime, an environment excursion
+    // adjudicates itself.
+    val retimed = suspectsOf(results).map { name =>
+      val sec = time(name)
+      System.err.println(s"[bench] retimed $name: ${fmt3(sec)}s")
+      name -> sec
+    }
     val sf = sfOf(sfDir).map(_.toString).getOrElse("0.1")
-    def fmt(v: Double) = fmt3(v)
-    // Calibration block: start + end probe timings, their sums, and
-    // the drift-normalized headline. scale > 1 means the host ran
-    // SLOWER than the committed round-11 reference; value_cal divides
-    // that out so cross-round deltas isolate code changes.
-    val calOkS = calStart.collect { case (_, v) if v >= 0 => v }
-    val calSum = if (calOkS.nonEmpty) calOkS.sum else -1.0
-    val calOkE = calEnd.collect { case (_, v) if v >= 0 => v }
-    val calSumEnd = if (calOkE.nonEmpty) calOkE.sum else -1.0
-    val scaleVsRef = wholeRunScale
-    val valueCal = if (scaleVsRef > 0) total / scaleVsRef else -1.0
-    // Suspect-retime pass (r12 verdict task #1): the calibration median
-    // protects the SUITE headline, but a single-query excursion in a
-    // flaky container — BENCH_r12's 18 s dd_tfidf_cos, really 3.8 s
-    // warm — is indistinguishable in the artifact from a real 8x
-    // regression. Any query slower than 3x its committed calm
-    // reference (BenchRefs.calm, host-scale-adjusted) re-runs ONCE,
-    // warm, same GC discipline, and BOTH readings ship: `queries`
-    // keeps the first reading, `retimed` carries the second, and
-    // `value_retimed` is the total with each suspect replaced by its
-    // better reading — a real regression reproduces in the retime, an
-    // environment excursion adjudicates itself.
-    // The trigger normalizes by each query's SEGMENT scale (falling
-    // back to the whole-run scale where a segment's own scale is
-    // dead): a query that co-ran with a localized degradation is
-    // priced against what the host delivered THEN, not the run's
-    // endpoint average (value_cal_seg promotion, r15 verdict #3).
-    val segIndex = results.map(_._1).zipWithIndex.toMap
-    def segScaleOf(name: String): Double = {
-      val i = segIndex.getOrElse(name, -1)
-      segScales.find(s => i >= s._1 && i < s._2).map(_._3).filter(_ > 0)
-        .getOrElse(wholeRunScale)
-    }
-    val suspects = suspectsOf(results, segScaleOf _)
-    val retimed = suspects.map { name =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val ok = try { selected(name)(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(s"[bench] retimed $name: ${fmt3(sec)}s" +
-        (if (ok) "" else " (failed)"))
-      name -> (if (ok) sec else -1.0)
-    }
-    val retimedMap = retimed.toMap
-    val totalRetimed = results.collect { case (n, v) if v >= 0 =>
-      retimedMap.get(n).filter(r => r >= 0 && r < v).getOrElse(v)
-    }.sum
-    val calJson = {
-      val s = calStart.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")
-      val e = calEnd.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")
-      val em = calEnd.toMap
-      val ratios = calStart.collect {
-        case (k, sv) if CalRefProbes.contains(k) =>
-          val best = Seq(sv, em.getOrElse(k, -1.0)).filter(_ >= 0)
-          val r = if (best.isEmpty) -1.0 else best.min / CalRefProbes(k)
-          "\"" + k + "\":" + fmt(r)
-      }.mkString(",")
-      // seg leads: it is the headline the segment instrument earns
-      s"""{"start":{$s},"end":{$e},"cal_total":${fmt(calSum)},"cal_total_end":${fmt(calSumEnd)},"probe_ratios":{$ratios},"cal_ref":${fmt(CalRef)},"host_scale":${fmt(scaleVsRef)},"value_cal_seg":${fmt(valueCalSeg)},"value_cal":${fmt(valueCal)},"n_cal_blocks":${calBlocks.size}}"""
-    }
-    println(f"[bench] headline value_cal_seg=${fmt(valueCalSeg)}s " +
-      f"(secondary value_cal=${fmt(valueCal)}s, raw=${fmt(total)}s, " +
-      f"host_scale=${fmt(scaleVsRef)})")
-    // full per-block probes + per-segment scales (bench_full.json
-    // only: the stdout line is budget-capped and the driver needs only
-    // the headline; humans read the segment table from the file)
-    val segJson = {
-      val blocks = calBlocks.map { case (n, ps) =>
-        s"""{"after_n":$n,"probes":{${ps.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")}}}"""
-      }.mkString("[", ",", "]")
-      val segs = segScales.map { case (a, b, sc, st) =>
-        s"""{"from":$a,"to":$b,"scale":${fmt(sc)},"seg_total":${fmt(st)},"seg_cal":${fmt(if (sc > 0) st / sc else -1.0)}}"""
-      }.mkString("[", ",", "]")
-      s""""cal_blocks":$blocks,"segments":$segs"""
-    }
-    val retimedJson = retimed
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val retimeFields =
-      s""""retimed":$retimedJson,"value_retimed":${fmt(totalRetimed)}"""
-    val allEntries = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-    // full map → file (sorted by name). Skipped under --only: a subset
-    // run must not overwrite the committed full-run artifact (a r12
-    // bisect session lost the calm run's file exactly this way).
-    val prov = graft.core.Provenance.jsonFields
-    val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"calibration":$calJson,$segJson,$retimeFields,"queries":${allEntries.mkString("{", ",", "}")},"sf":$sf,$prov}"""
+    val (fullJson, line) =
+      renderJson(results, retimed, sf, graft.core.Provenance.jsonFields)
+    // full map → file. Skipped under --only: a subset run must not
+    // overwrite the committed full-run artifact (a r12 bisect session
+    // lost the calm run's file exactly this way).
     if (only.isEmpty)
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_full.json"),
         fullJson.getBytes("UTF-8"))
       catch { case _: Throwable => () }
-    // compact line → stdout, slowest-first entries until the budget
-    // (trimmed from 1500 when the ~300-byte calibration block joined
-    // the line: the driver parses a ~2 KB stdout tail, and the full
-    // map is in bench_full.json anyway)
-    // retime entries (usually none) spend from the same line budget so
-    // a 15-retime degraded run can't push the line past the driver's
-    // ~2 KB stdout-tail window and truncate it mid-JSON
-    val budget = math.max(400, 1200 - retimeFields.length)
-    val bySlow = results.sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-    val kept = new scala.collection.mutable.ListBuffer[String]
-    var used = 0
-    for (e <- bySlow if used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"calibration":$calJson,$retimeFields,"queries":${kept.mkString("{", ",", "}")},"sf":$sf,$prov}"""
     println(line)
     spark.stop()
   }

@@ -1,60 +1,31 @@
 package graft
 
-/** Committed calm per-query bench references at sf0.1: the round-12
-  * calm builder run (commit 82598a6's `bench_full.json`, raw total
-  * 87.4 s, host_scale 1.058 — i.e. measured within 6% of the calm
-  * container reference). Bench's suspect-retime pass compares each
-  * timed value against `3 x ref x host_scale`: BENCH_r12's 18.0 s
-  * `dd_tfidf_cos` (really 3.8 s warm — a mid-run environment
-  * excursion in the driver container) was indistinguishable in the
-  * artifact from a real 8x regression, so outliers now re-time
-  * themselves once, warm, and ship BOTH readings.
+/** Committed per-query bench references at sf0.1, in raw seconds.
+  * Bench's suspect-retime pass re-times any query that reads more than
+  * `3 x ref` AND more than `ref + 0.75 s`: BENCH_r12's 18.0 s
+  * `dd_tfidf_cos` (really 3.8 s warm — a mid-run environment excursion
+  * on the bench host) was indistinguishable in the artifact from
+  * a real 8x regression, so outliers now re-time themselves once, warm,
+  * and ship BOTH readings.
   *
-  * Maintenance: regenerate from a calm full run's bench_full.json
-  * whenever a deliberate perf change moves a query's steady state
-  * (the retime pass only fires above 3x, so ordinary drift never
-  * requires an update). Round-13 updates under that policy: dd_cdc,
-  * pipe_spancorrupt and pipe_ccnet moved deliberately (codegen
-  * kernels replacing interpreted HOFs behind the Generate barriers);
-  * their entries are the r13 refresh run's raw values normalized by
-  * its host_scale 1.267 (0.286/0.213/1.309 -> 0.226/0.168/1.033) —
-  * keeping the r12 values would have let a 3x regression of the NEW
-  * steady state pass unretimed under thresholds sized for the old
-  * one. Late-r13 update, same policy: dd_tfidf_cos, pipe_ccnet,
-  * text_langid_nb and pipe_dsir moved deliberately (tokenized-base /
-  * feature-table localCheckpoints deduplicating multi-consumer corpus
-  * scans); entries re-sized at ebcd366 from the COMMITTED refresh-
-  * gates run at host_scale 1.046 (commit 3fa1a27's bench_full.json;
-  * this supersedes an earlier re-size from an uncommitted hs-1.097
-  * local run — BENCH_NOTES §"Round 13" item 5 records the same
-  * event). The calm run was chosen because host-scale normalization
-  * is NOT per-query-linear: across same-round runs (hs
-  * 1.267/1.097/1.046), normalized values for UNCHANGED queries swung
-  * +-25-30% (dd_jaccard read 1.24/1.59/1.38), so a ref taken from a
-  * high-hs run silently absorbs normalization error, not just the
-  * deliberate move. 2.590/1.347/1.690/1.056 -> 2.476/1.288/1.616/
-  * 1.010. Round-14 correction (ADVICE r13): pipe_ccnet's single-run
-  * 1.288 had itself absorbed that cross-run noise (it ROSE 25% while
-  * the query measurably got faster); re-sized to the MEDIAN of the
-  * three committed post-checkpoint full runs — 3fa1a27 1.347/1.046 =
-  * 1.288, 1fc943d 1.521/1.044 = 1.457, BENCH_r13 1.759/1.262 = 1.394
-  * -> 1.394. The other three moved queries' medians sit within 5% of
-  * their committed refs (dd_tfidf_cos 2.476, text_langid_nb 1.540 vs
-  * 1.616, pipe_dsir 1.010), so they stand. The residual cross-run
-  * error (~+-30%) is immaterial to the retime purpose: the trigger is
-  * 3 x ref x host_scale + 0.75 s slack, sized for catching 8x
-  * excursions. ToolingSpec's drift rot-gate (r13 verdict #4) asserts
-  * every ref stays within 3x of the committed bench_full.json value,
-  * so a stale re-pin now fails the suite instead of mis-arming the
-  * retime trigger.
+  * Maintenance: a ref is pinned from a query's raw reading in a
+  * committed full run's bench_full.json (most entries predate that and
+  * were pinned from rescaled readings; the rot-gate below holds them
+  * to the raw readings too). Re-pin a ref when a deliberate perf change
+  * moves that query's steady state: a ref left at the old steady state
+  * lets a 3x regression of the NEW one pass unretimed (or burns retime
+  * slots on a query that got slower on purpose). Ordinary drift never
+  * requires an update — the trigger only fires above 3x. ToolingSpec's
+  * drift rot-gate asserts every ref stays within 3x (+0.75 s) of the
+  * committed bench_full.json reading, so a stale ref fails the suite
+  * instead of mis-arming the retime trigger.
   */
 object BenchRefs {
-  /** Drift rot-gate predicate (r13 verdict #4): calm refs that have
-    * silently drifted from the engine's committed steady state.
-    * `normalized` is the committed bench_full.json per-query map
-    * divided by its host_scale. A side more than `factor`x the other
-    * PLUS an absolute slack is an outlier: either a perf change landed
-    * without a ref update, or a re-pin went stale — both mis-arm
+  /** Drift rot-gate predicate: refs that have silently drifted from the
+    * engine's committed steady state. `readings` is the committed
+    * bench_full.json per-query map. A side more than `factor`x the
+    * other PLUS an absolute slack is an outlier: either a perf change
+    * landed without a ref update, or a re-pin went stale — both mis-arm
     * Bench's retime trigger (a stale-high ref lets a real regression
     * pass unretimed; a stale-low one burns retime slots on noise).
     * The additive slack ignores sub-second scheduler noise, same
@@ -62,10 +33,10 @@ object BenchRefs {
     * mis-adjudicate the 3x-class excursions the trigger exists for.
     * ToolingSpec runs this against the committed artifact and proves
     * it fires on a 5x perturbation in either direction. */
-  def driftOutliers(normalized: Map[String, Double],
+  def driftOutliers(readings: Map[String, Double],
                     factor: Double = 3.0, slackSec: Double = 0.3): Seq[String] =
     calm.toSeq.sortBy(_._1).collect {
-      case (n, ref) if normalized.get(n).exists(v =>
+      case (n, ref) if readings.get(n).exists(v =>
         v > 0 && math.max(ref, v) > factor * math.min(ref, v) + slackSec) => n
     }
 
@@ -92,16 +63,6 @@ object BenchRefs {
     "emb_ch_index"->0.642, "emb_decontam"->0.201, "emb_drift"->0.270,
     "emb_hardneg"->0.388, "emb_ivf_assign"->0.223, "emb_ivf_knn"->0.385,
     "emb_ivfpq"->0.695, "emb_kcenter"->0.722, "emb_kmeans"->0.370,
-    // emb_lsh_buckets / emb_neardup / emb_knn_graph re-pinned round 16
-    // from a calm full bench_full run (raw 91.9 s, host_scale 1.064,
-    // zero retimes; values are raw/host_scale — ADVICE r15 asked for
-    // exactly this re-pin after r15's one-off warm readings). The
-    // moves are the r16 chain cells (deliberate): the consumers pay a
-    // cells-count agg + broadcast + explode for flood connectivity —
-    // emb_neardup 0.406→0.664, emb_knn_graph 0.537→1.037 (its top-3
-    // window also ranks the chain candidates); emb_lsh_buckets stays
-    // chain-free (0.233→0.256 is noise-level drift re-pinned while
-    // here).
     "emb_knn"->0.234, "emb_knn_graph"->1.037, "emb_lsh_buckets"->0.256,
     "emb_matryoshka"->0.424, "emb_mips"->0.201, "emb_mmr"->0.986,
     "emb_mrr"->1.041, "emb_neardup"->0.664, "emb_norms"->0.058,
@@ -113,7 +74,7 @@ object BenchRefs {
     "fn_math"->0.065, "fn_nested"->0.075, "fn_regex"->0.055,
     "fn_string"->0.066, "fn_temporal"->0.062, "graph_assortativity"->0.492,
     "graph_bfs"->0.252, "graph_cc"->0.226, "graph_domainrank"->0.922,
-    "graph_hits"->1.147, "graph_kcore"->1.457, "graph_lpa"->0.246,
+    "graph_hits"->1.147, "graph_kcore"->0.564, "graph_lpa"->0.246,
     "graph_pagerank"->0.409, "graph_ppr"->1.118, "graph_reciprocity"->0.294,
     "graph_triangles"->0.158, "join_anti"->0.157, "join_asof"->0.124,
     "join_asof_native"->0.207, "join_asof_tol"->0.165, "join_cogroup"->0.121,

@@ -75,26 +75,30 @@ object Scaling30 {
     val spark = Sessions.build("graft-scaling30")
     graft.Bench.warmJvm(spark)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-sc30").toString
-    Tables.all.foreach { tbl =>
-      val src = spark.read.parquet(s"$base/$tbl.parquet")
-      val out = KeyCols.get(tbl) match {
-        case Some(ks) => extend(src, ks, Copies)
-        case None => src // dimension tables stay fixed
-      }
-      out.write.mode("overwrite").parquet(s"$dir/$tbl.parquet")
-    }
-
     val names = selected
     println(s"[scaling30] ${names.size} non-pair-math queries, " +
       s"data ratio ${dataRatio.toInt}x (3x-extended $base — SYNTHETIC)")
-    val rows = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      val ts = ScalingProbe.timeOnce(fn(spark, small))
-      val tl = ScalingProbe.timeOnce(fn(spark, dir))
-      val ratio = if (ts > 0 && tl > 0) tl / ts else -1.0
-      (name, ts, tl, ratio)
-    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-sc30").toString
+    // the extended corpus is deleted before the flagged exit below:
+    // sys.exit begins JVM shutdown without unwinding the stack
+    val rows =
+      try {
+        Tables.all.foreach { tbl =>
+          val src = spark.read.parquet(s"$base/$tbl.parquet")
+          val out = KeyCols.get(tbl) match {
+            case Some(ks) => extend(src, ks, Copies)
+            case None => src // dimension tables stay fixed
+          }
+          out.write.mode("overwrite").parquet(s"$dir/$tbl.parquet")
+        }
+        names.map { name =>
+          val fn = SparkEntry.queries(name)
+          val ts = ScalingProbe.timeOnce(fn(spark, small))
+          val tl = ScalingProbe.timeOnce(fn(spark, dir))
+          val ratio = if (ts > 0 && tl > 0) tl / ts else -1.0
+          (name, ts, tl, ratio)
+        }
+      } finally graft.core.Resources.deleteRecursively(dir)
     def f(v: Double) = graft.Bench.fmt3(v)
     val json = rows.map { case (n, ts, tl, r) =>
       s""""$n":{"small":${f(ts)},"large30":${f(tl)},"ratio":${f(r)}}"""

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Bench.fmt3
 import graft.SparkEntry
-import graft.core.{Provenance, Sessions, Tables}
+import graft.core.{Provenance, Resources, Sessions, Tables}
 
 /** Corruption robustness sweeps: every catalog query against clones of
   * the real testdata, rewritten by one corruption axis.
@@ -19,9 +19,9 @@ import graft.core.{Provenance, Sessions, Tables}
   * The criterion is crash-only: each query is materialized through the
   * noop sink (every output column, so no projection is pruned) and then
   * counted; any exception records `error:` and fails the sweep. Bounded
-  * axes also fail a query whose host-normalized time exceeds its bound
-  * (`slow:`). The clones derive from the REAL tables, so a sweep can
-  * never drift from the testdata contract, and every cell mask is
+  * axes also fail a query whose wall time exceeds its bound (`slow:`).
+  * The clones derive from the REAL tables, so a sweep can never drift
+  * from the testdata contract, and every cell mask is
   * deterministic (xxhash64 of the full original row, salted per table
   * and column), so reruns and fix verification see identical
   * corruption. Exits 1 when any query is not `ok:`.
@@ -33,7 +33,7 @@ object Sweep {
     * fields (name -> raw JSON value) and its mutator, called with each
     * table and the table's name as the mask salt. `timed` appends
     * per-query seconds to each status; `bound` gives each query's
-    * ceiling in calm-host seconds. */
+    * ceiling in seconds. */
   final case class Axis(artifact: String, action: String,
                         mutate: (DataFrame, String) => DataFrame,
                         fields: Seq[(String, String)] = Nil,
@@ -73,12 +73,9 @@ object Sweep {
   }
 
   /** Runs `queries` against the clone tables in `dir`. Returns the
-    * artifact JSON and the number of queries that are not `ok:`.
-    * Measured seconds are divided by `hostScale` before they are
-    * compared with the axis bound. */
+    * artifact JSON and the number of queries that are not `ok:`. */
   def run(spark: SparkSession, name: String, axis: Axis, schemaDir: String,
-          dir: String, queries: Seq[(String, QueryFn)],
-          hostScale: Double = 1.0): (String, Int) = {
+          dir: String, queries: Seq[(String, QueryFn)]): (String, Int) = {
     val results = queries.map { case (q, fn) =>
       val t0 = System.nanoTime()
       val status =
@@ -88,10 +85,9 @@ object Sweep {
           val n = df.count()
           val sec = (System.nanoTime() - t0) / 1e9
           val t = if (axis.timed) s":${fmt3(sec)}s" else ""
-          axis.bound.map(_(q)).filter(sec / hostScale > _) match {
+          axis.bound.map(_(q)).filter(sec > _) match {
             case Some(b) =>
-              System.err.println(s"[sweep] $name $q SLOW: ${fmt3(sec)}s " +
-                s"(bound ${b}s × host $hostScale)")
+              System.err.println(s"[sweep] $name $q SLOW: ${fmt3(sec)}s (bound ${b}s)")
               s"slow:$n$t>bound:$b"
             case None => s"ok:$n$t"
           }
@@ -105,8 +101,7 @@ object Sweep {
     }
     val failed = results.count(!_._2.startsWith("ok:"))
     val esc = SweepJson.esc _
-    val scale = if (axis.bound.isDefined) Seq("host_scale" -> fmt3(hostScale)) else Nil
-    val extra = (scale ++ axis.fields).map { case (k, v) => s""""$k":$v,""" }.mkString
+    val extra = axis.fields.map { case (k, v) => s""""$k":$v,""" }.mkString
     val entries = results
       .map { case (q, st) => s""""${esc(q)}":"${esc(st)}"""" }.mkString("{", ",", "}")
     val json =
@@ -125,30 +120,20 @@ object Sweep {
     val spark = Sessions.build(s"graft-sweep-$name")
     graft.Bench.warmJvm(spark)
 
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
-    Tables.all.foreach { tbl =>
-      axis.mutate(spark.read.parquet(s"$schemaDir/$tbl.parquet"), tbl)
-        .write.mode("overwrite").parquet(s"$dir/$tbl.parquet")
-    }
-
-    // host normalization for the wall-clock bounds: the same robust
-    // median-of-probe-ratios scale Bench uses (floored at 1 — a
-    // faster-than-reference host never LOOSENS a bound). Two distinct
-    // calibrate() blocks, like Bench's own start/end usage: passing
-    // one block twice lost hostScale's min-of-two-blocks JIT/GC
-    // discard and inflated the scale ~1.5x in the r12 artifact,
-    // loosening every bound (ADVICE r12).
-    val hostScale =
-      if (axis.bound.isEmpty) 1.0
-      else {
-        val cal1 = graft.Bench.calibrate(spark)
-        val cal2 = graft.Bench.calibrate(spark)
-        math.max(1.0, graft.Bench.hostScale(cal1, cal2))
-      }
-
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-    val (json, failed) = run(spark, name, axis, schemaDir, dir, queries, hostScale)
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson), json.getBytes("UTF-8"))
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    // the clone tables are deleted before any exit: sys.exit begins JVM
+    // shutdown without unwinding the stack, so it must come after this
+    val failed =
+      try {
+        Tables.all.foreach { tbl =>
+          axis.mutate(spark.read.parquet(s"$schemaDir/$tbl.parquet"), tbl)
+            .write.mode("overwrite").parquet(s"$dir/$tbl.parquet")
+        }
+        val (json, failed) = run(spark, name, axis, schemaDir, dir, queries)
+        java.nio.file.Files.write(java.nio.file.Paths.get(outJson), json.getBytes("UTF-8"))
+        failed
+      } finally Resources.deleteRecursively(dir)
     println(s"[sweep] $name: ${queries.size - failed}/${queries.size} ok -> $outJson")
     spark.stop()
     if (failed > 0) sys.exit(1)
@@ -448,12 +433,10 @@ object Sweep {
     name.endsWith("key") || name == "user_id" || name == "doc_id" ||
       name == "vec_id" || name == "src" || name == "dst"
 
-  /** Per-query wall-clock ceiling of the skew axis at sf0.001, in
-    * CALM-host seconds (the recorded time is divided by the measured
-    * host_scale before comparison, so a slow container doesn't flip the
-    * gate). The r11 sweep's slowest NON-pathological entry was dd_cdc
-    * at 12.6 s; 25 s gives 2× headroom on top of the host normalization
-    * while still catching the class this bound exists for — the
+  /** Per-query wall-clock ceiling of the skew axis at sf0.001, in raw
+    * seconds. The r11 sweep's slowest NON-pathological entry was dd_cdc
+    * at 12.6 s; 25 s gives 2× headroom while still catching the class
+    * this bound exists for — the
     * unbounded stand-in that sent emb_ivfpq to 98 s (r11, fixed). A
     * bare "ok:30.9s" used to hide a real regression behind an inherent
     * one; now any entry over its bound records `slow:` and fails the

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.{Readers, Writers}
 import graft.operators.MultimodalOps
@@ -8,8 +7,7 @@ import graft.operators.MultimodalOps
 /** Source/sink round-trips (§2.1/§2.2) + multimodal decode plumbing. */
 class FormatsSpec extends SparkSpec {
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-fmt").toString
+  private def tmp(): String = TestSpark.tempDir("graft-fmt")
 
   test("csv sink/source round-trip with explicit schema") {
     val dir = tmp() + "/csv"

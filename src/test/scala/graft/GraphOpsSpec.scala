@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.functions.HashKernels
 
 /** Brute-force differential tests for the link-graph family and the
@@ -24,7 +23,7 @@ class GraphOpsSpec extends SparkSpec {
     val docs = Vector.fill(n) {
       Vector.fill(3 + rnd.nextInt(28))(vocab(rnd.nextInt(vocab.size)))
     }
-    val dir = Files.createTempDirectory(s"graft-graph$seed").toString
+    val dir = TestSpark.tempDir(s"graft-graph$seed")
     docs.zipWithIndex
       .map { case (tk, i) => (i.toLong, tk.mkString(" "), lang(i), "srcG", 1L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -186,7 +185,7 @@ class GraphOpsSpec extends SparkSpec {
       val len = if (i % 29 == 0) 200 + rnd.nextInt(50) else 10 + rnd.nextInt(11)
       Vector.fill(len)(vocab(rnd.nextInt(vocab.size)))
     }
-    val dir = Files.createTempDirectory("graft-outliers").toString
+    val dir = TestSpark.tempDir("graft-outliers")
     docs.zipWithIndex
       .map { case (tk, i) =>
         (i.toLong, tk.mkString(" "), langs(i % 3), "srcG", 1L)
@@ -235,7 +234,7 @@ class GraphOpsSpec extends SparkSpec {
         val len = 10 + rnd.nextInt(15) + (if (src == "src2") shift else 0)
         (i.toLong, Vector.fill(len)(vocab(rnd.nextInt(vocab.size))), src)
       }
-      val dir = Files.createTempDirectory(s"graft-ks$shift").toString
+      val dir = TestSpark.tempDir(s"graft-ks$shift")
       docs.map { case (id, tk, src) => (id, tk.mkString(" "), "en", src, 1L) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -269,7 +268,7 @@ class GraphOpsSpec extends SparkSpec {
       val si = if (rnd.nextBoolean()) li else rnd.nextInt(4)
       (i.toLong, "the scan window", langs(li), srcs(si), 1L)
     }
-    val dir = Files.createTempDirectory("graft-chi2").toString
+    val dir = TestSpark.tempDir("graft-chi2")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
     val o = docs.groupBy(x => (x._3, x._4)).view.mapValues(_.size).toMap

@@ -25,7 +25,7 @@ import org.scalatest.BeforeAndAfterAll
 class HiveCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var hive: SparkSession = _
-  private val tmp = java.nio.file.Files.createTempDirectory("graft-hive")
+  private val tmp = java.nio.file.Paths.get(TestSpark.tempDir("graft-hive"))
 
   override def beforeAll(): Unit = {
     val base = TestSpark.spark // pin the shared context + default session first

@@ -35,7 +35,7 @@ class KafkaWiringSpec extends SparkSpec {
   test("kafka producer builder reaches connector resolution (jar absent)") {
     val stream = Readers.rate(spark, 1)
       .selectExpr("CAST(value AS STRING) AS value")
-    val tmp = java.nio.file.Files.createTempDirectory("kafkaw").toString
+    val tmp = TestSpark.tempDir("kafkaw")
     // If the jar ever appears, start() SUCCEEDS and the tripwire
     // assertion fires — capture the live query so the failure doesn't
     // leave a rate-source stream running for the rest of the suite.

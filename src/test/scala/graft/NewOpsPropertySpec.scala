@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Randomized differential tests for the round-6 operators, against
@@ -22,7 +21,7 @@ class NewOpsPropertySpec extends SparkSpec {
     val docs = Vector.fill(40) {
       Vector.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size)))
     }
-    val dir = Files.createTempDirectory(s"graft-prop$seed").toString
+    val dir = TestSpark.tempDir(s"graft-prop$seed")
     docs.zipWithIndex
       .map { case (tk, i) => (i.toLong, tk.mkString(" "), "en", "srcP", 1L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -90,7 +89,7 @@ class NewOpsPropertySpec extends SparkSpec {
           rnd.nextInt(12).toLong, kinds(rnd.nextInt(kinds.size)),
           rnd.nextDouble() * 100, "{}")
       }
-      val dir = Files.createTempDirectory(s"graft-fun$seed").toString
+      val dir = TestSpark.tempDir(s"graft-fun$seed")
       events.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.parquet(s"$dir/events.parquet")
       // brute force on nanos→micros-truncated times, exactly the
@@ -129,7 +128,7 @@ class NewOpsPropertySpec extends SparkSpec {
           rnd.nextInt(30).toLong, kinds(rnd.nextInt(kinds.size)),
           rnd.nextDouble() * 100, "{}")
       }
-      val dir = Files.createTempDirectory(s"graft-ab$seed").toString
+      val dir = TestSpark.tempDir(s"graft-ab$seed")
       events.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.parquet(s"$dir/events.parquet")
       val byUser = events.groupBy(_._3).map { case (u, es) =>
@@ -188,7 +187,7 @@ class NewOpsPropertySpec extends SparkSpec {
           rnd.nextInt(25).toLong, kinds(rnd.nextInt(kinds.size)),
           rnd.nextDouble() * 100, "{}")
       }
-      val dir = Files.createTempDirectory(s"graft-auc$seed").toString
+      val dir = TestSpark.tempDir(s"graft-auc$seed")
       events.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.parquet(s"$dir/events.parquet")
       // brute force: every (positive, negative) user pair scored
@@ -239,7 +238,7 @@ class NewOpsPropertySpec extends SparkSpec {
       val names = Vector.fill(60)( // length 3-6 over {a,b,c}
         Vector.fill(3 + rnd.nextInt(4))(
           ('a' + rnd.nextInt(3)).toChar).mkString)
-      val dir = Files.createTempDirectory(s"graft-fuzzy$seed").toString
+      val dir = TestSpark.tempDir(s"graft-fuzzy$seed")
       names.zipWithIndex.map { case (nm, i) => (i.toLong, nm) }
         .toDF("c_custkey", "c_name")
         .write.parquet(s"$dir/customer.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Invariant + differential tests for the round-8 operators — the
@@ -21,7 +20,7 @@ class NewOpsR8Spec extends SparkSpec {
       // cluster prices so bands are actually populated
       val rows = Vector.tabulate(200)(i =>
         (i.toLong, 1000.0 + rnd.nextInt(40) * 10 + rnd.nextDouble()))
-      val dir = Files.createTempDirectory(s"graft-r8j$seed").toString
+      val dir = TestSpark.tempDir(s"graft-r8j$seed")
       rows.toDF("o_orderkey", "o_totalprice")
         .write.parquet(s"$dir/orders.parquet")
       val want = rows.flatMap { case (k1, p1) =>
@@ -43,7 +42,7 @@ class NewOpsR8Spec extends SparkSpec {
     val rnd = new scala.util.Random(21L)
     val vecs = Vector.tabulate(30)(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f), i % 3))
-    val dir = Files.createTempDirectory("graft-r8e").toString
+    val dir = TestSpark.tempDir("graft-r8e")
     vecs.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
     def code(v: Array[Float]): Long =
@@ -73,7 +72,7 @@ class NewOpsR8Spec extends SparkSpec {
       val docs = Vector.tabulate(60)(i =>
         (i.toLong,
           Vector.fill(2 + rnd.nextInt(3))(vocab(rnd.nextInt(3))).mkString(" ")))
-      val dir = Files.createTempDirectory(s"graft-r8d$seed").toString
+      val dir = TestSpark.tempDir(s"graft-r8d$seed")
       docs.map { case (i, t) => (i, t, "en", "srcP", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -203,7 +202,7 @@ class NewOpsR8Spec extends SparkSpec {
             "en", s"src$si", nTok.toLong)
         }
       }
-      val dir = Files.createTempDirectory(s"graft-r8u$seed").toString
+      val dir = TestSpark.tempDir(s"graft-r8u$seed")
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
       val nTokBySrc = rows.groupBy(_._4)
@@ -563,7 +562,7 @@ class NewOpsR8Spec extends SparkSpec {
     val texts = Vector("a b", "c d", "e f", "g h", "i j", "k l")
     val docs = Vector.tabulate(40)(i =>
       (i.toLong, texts(rnd.nextInt(6)), "en", "srcG", 3L))
-    val dir = Files.createTempDirectory("graft-r8gs").toString
+    val dir = TestSpark.tempDir("graft-r8gs")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
     val rows = SparkEntry.queries("pipe_groupsplit")(spark, dir).collect()

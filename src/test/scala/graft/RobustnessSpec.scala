@@ -19,7 +19,7 @@ class RobustnessSpec extends SparkSpec {
   /** Write limit(n) clones of every table; mutate selected tables. */
   private def cloneDir(n: Int,
                        mutate: Map[String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = Map.empty): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-rob$n").toString
+    val dir = TestSpark.tempDir(s"graft-rob$n")
     graft.core.Tables.all.foreach { tbl =>
       val base = spark.read.parquet(s"$schemaDir/$tbl.parquet").limit(n)
       mutate.getOrElse(tbl, identity[org.apache.spark.sql.DataFrame] _)(base)

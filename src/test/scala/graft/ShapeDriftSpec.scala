@@ -23,7 +23,7 @@ class ShapeDriftSpec extends SparkSpec {
       (2L, vec(96, 1), 0), // padded: dims past 63 ignored by the fold
       (3L, Array.empty[Float], 0) // failed encode -> code 0
     )
-    val dir = java.nio.file.Files.createTempDirectory("graft-shapepin").toString
+    val dir = TestSpark.tempDir("graft-shapepin")
     graft.core.Tables.all.foreach { tbl =>
       if (tbl == "embeddings")
         vecs.toDF("vec_id", "embedding", "label")

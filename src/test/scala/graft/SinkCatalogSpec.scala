@@ -56,7 +56,7 @@ class SinkCatalogSpec extends SparkSpec {
       // application restart story: metadata is gone (in-memory catalog)
       // but the files are not — CREATE TABLE ... LOCATION re-attaches
       // them with schema inferred from the parquet footers
-      val ext = java.nio.file.Files.createTempDirectory("graft-ext").toString
+      val ext = TestSpark.tempDir("graft-ext")
       spark.table("cat_nation").write.mode("overwrite").parquet(ext)
       spark.sql(s"CREATE TABLE cat_nation_ext USING parquet LOCATION '$ext'")
       assert(spark.sql("SELECT count(*) FROM cat_nation_ext").first().getLong(0) == 25L)
@@ -80,7 +80,7 @@ class SinkCatalogSpec extends SparkSpec {
   test("upsertParquet is idempotent under batch retries") {
     val s = spark
     import s.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-upsert").toString + "/t"
+    val path = TestSpark.tempDir("graft-upsert") + "/t"
     val b1 = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "tag", "v")
     val b2 = Seq((2L, "b", 25.0), (3L, "c", 30.0)).toDF("k", "tag", "v")
     def snap() = spark.read.parquet(path).collect()

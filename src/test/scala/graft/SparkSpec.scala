@@ -14,8 +14,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft-wh"))
       // UI on (random port) so MetricsExportSpec can scrape the
       // PrometheusServlet sink end-to-end — the metrics system starts
       // with the process-global SparkContext, so the confs must be here
@@ -25,8 +24,23 @@ object TestSpark {
       .foldLeft(s) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     sess.sparkContext.setLogLevel("WARN")
+    // every run of a window without PARTITION BY logs this warning;
+    // PlanAudit's GLOBALWIN audit already fails on any such window it
+    // has not whitelisted as bounded, so here it only buries real WARNs
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     sess
   }
+
+  /** A fresh directory under the system temp dir, deleted with its
+    * contents when the test JVM exits. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    sys.addShutdownHook(graft.core.Resources.deleteRecursively(dir))
+    dir
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
 }
 

@@ -85,7 +85,7 @@ class TablesSchemaSpec extends SparkSpec {
   test("registerAll survives one broken table (fault isolation)") {
     // Point at a dir where only SOME tables exist: healthy views must
     // still register and be queryable via spark.sql.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-partial").toFile
+    val tmp = new java.io.File(TestSpark.tempDir("graft-partial"))
     val link = (n: String) => java.nio.file.Files.createSymbolicLink(
       new java.io.File(tmp, s"$n.parquet").toPath,
       java.nio.file.Paths.get(s"${TestSpark.sf0001}/$n.parquet"))

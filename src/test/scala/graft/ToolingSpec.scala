@@ -2,77 +2,73 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Unit pins for the round-12 instruments: the median-of-probe-ratios
-  * host calibration (Bench.hostScale) and the huge-value corruption
-  * generator (Sweep.corruptHuge). Both adjudicate other results —
-  * a drift instrument that over-corrects or a sweep that silently
-  * corrupts nothing would invalidate conclusions downstream, so their
-  * own contracts get direct tests.
+/** Unit pins for the bench and sweep tooling: Bench's suspect-retime
+  * trigger and stdout-line rendering, the BenchRefs drift rot-gate, the
+  * Sweep loop and the huge-value corruption generator
+  * (Sweep.corruptHuge). Each adjudicates other results — a retime pass
+  * that never fires, a stdout line that truncates, or a sweep that
+  * silently corrupts nothing would invalidate conclusions downstream,
+  * so their own contracts get direct tests.
   */
 class ToolingSpec extends SparkSpec {
 
-  private def probes(c: Double, s: Double, w: Double) =
-    Seq("cal_cpu" -> c, "cal_shuffle" -> s, "cal_window" -> w)
-
-  test("hostScale replays the r11 driver anomaly to ~1.17, not 4.7") {
-    // the exact numbers from the r11 driver bench whose sum-based
-    // host_scale shipped 4.711 / value_cal 21.6 s
-    val start = probes(0.227, 0.532, 6.072)
-    val end = probes(0.068, 0.313, 5.765)
-    val hs = Bench.hostScale(start, end)
-    assert(math.abs(hs - 0.313 / 0.268) < 1e-9,
-      s"median ratio should be the shuffle probe's ${0.313 / 0.268}, got $hs")
-    assert(hs > 1.1 && hs < 1.25, s"replayed r11 host_scale: $hs")
-  }
-
-  test("hostScale takes min(start, end) per probe and survives failed probes") {
-    // min discards one-sided JIT residue: cpu start inflated 3×
-    val warm = Bench.hostScale(probes(0.276, 0.268, 0.639),
-      probes(0.092, 0.268, 0.639))
-    assert(math.abs(warm - 1.0) < 1e-9, s"JIT-inflated start not discarded: $warm")
-    // a probe reporting -1 in BOTH blocks is excluded, not a poison
-    // pill; with 2 live ratios the median AVERAGES the middle pair —
-    // the old upper-median let the larger ratio always win in exactly
-    // the degraded case (ADVICE r12)
-    val oneDead = Bench.hostScale(probes(-1.0, 0.536, 0.639),
-      probes(-1.0, 0.536, 1.278))
-    assert(math.abs(oneDead - 1.5) < 1e-9,
-      s"dead probe should leave median of {2.0, 1.0}=1.5 (mean of pair), got $oneDead")
-    // -1 in one block only: the live block's value is used
-    val halfDead = Bench.hostScale(probes(0.092, -1.0, 0.639),
-      probes(0.092, 0.536, 0.639))
-    assert(math.abs(halfDead - 1.0) < 1e-9, s"half-dead probe mishandled: $halfDead")
-    // all probes dead → -1 sentinel (Bench reports value_cal = -1)
-    assert(Bench.hostScale(probes(-1, -1, -1), probes(-1, -1, -1)) == -1.0)
-  }
-
   test("suspectsOf flags the r12 excursion, not calm noise") {
-    // replay: BENCH_r12's dd_tfidf_cos read 18.0 s at host_scale 1.498
-    // against a 2.624 s committed calm ref — must be retimed
+    // replay: BENCH_r12's dd_tfidf_cos read 18.0 s against its ~2.5 s
+    // committed calm ref — must be retimed
     val r12 = Seq("dd_tfidf_cos" -> 17.972, "dd_containment" -> 3.519)
-    assert(Bench.suspectsOf(r12, 1.498) == Seq("dd_tfidf_cos"))
+    assert(Bench.suspectsOf(r12) == Seq("dd_tfidf_cos"))
     // a query running AT its calm ref is never a suspect, nor is a
     // failed one (-1), nor a name with no committed reference
     assert(Bench.suspectsOf(Seq("dd_tfidf_cos" -> 2.624,
-      "dd_cdc" -> -1.0, "q_not_in_refs" -> 99.0), 1.0).isEmpty)
+      "dd_cdc" -> -1.0, "q_not_in_refs" -> 99.0)).isEmpty)
     // absolute slack: a 0.129 s query tripling to 0.5 s is scheduler
     // noise, not an excursion worth a retime slot
-    assert(Bench.suspectsOf(Seq("tw_windowall" -> 0.5), 1.0).isEmpty)
-    assert(Bench.suspectsOf(Seq("tw_windowall" -> 1.2), 1.0) ==
+    assert(Bench.suspectsOf(Seq("tw_windowall" -> 0.5)).isEmpty)
+    assert(Bench.suspectsOf(Seq("tw_windowall" -> 1.2)) ==
       Seq("tw_windowall"), "0.129 s ref at 1.2 s is 9x AND past slack")
-    // host_scale scales the threshold (3x ref x 2.0): 14 s at scale
-    // 2.0 is under 2.624*3*2=15.7 — not a suspect; floored at 1 for a
-    // fast host so calm refs are never shrunk
-    assert(Bench.suspectsOf(Seq("dd_tfidf_cos" -> 14.0), 2.0).isEmpty)
-    assert(Bench.suspectsOf(Seq("dd_tfidf_cos" -> 14.0), 0.5) ==
-      Seq("dd_tfidf_cos"))
     // worst-excess-first ordering and the MaxRetimes cap
     val many = BenchRefs.calm.toSeq.sortBy(_._1).take(Bench.MaxRetimes + 5)
       .zipWithIndex.map { case ((n, ref), i) => n -> (ref * 10 + i) }
-    val s = Bench.suspectsOf(many, 1.0)
+    val s = Bench.suspectsOf(many)
     assert(s.size == Bench.MaxRetimes, s"cap: ${s.size}")
     val excess = many.toMap
     assert(s == s.sortBy(n => -(excess(n) - BenchRefs.calm(n))), "worst first")
+  }
+
+  test("Bench.renderJson: the stdout line parses, fits 2 KB and totals the live readings") {
+    // Bench's stdout line is parsed out of a ~2 KB tail. Worst
+    // case: the full catalog, every reading six digits wide, and the
+    // maximum number of retimes on the longest names
+    val names = BenchRefs.calm.keys.toSeq.sorted
+    val results = names.zipWithIndex.map { case (n, i) =>
+      n -> (if (i % 50 == 7) -1.0 else 100.0 + i * 0.123) }
+    val failed = results.filter(_._2 < 0).map(_._1).toSet
+    val retimed = names.filterNot(failed).sortBy(n => (-n.length, n))
+      .take(Bench.MaxRetimes).map(_ -> 99.999)
+    val (full, line) = Bench.renderJson(results, retimed, "0.1",
+      graft.core.Provenance.jsonFields)
+    assert(line.getBytes("UTF-8").length <= 2048, s"line is ${line.length} bytes")
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val live = results.collect { case (_, v) if v >= 0 => v }.sum
+    // every retime beats its first reading, so each one replaces it
+    val liveRetimed = live - retimed.map(r => results.toMap.apply(r._1)).sum +
+      retimed.size * 99.999
+    for ((label, doc) <- Seq("full" -> full, "line" -> line)) {
+      val root = om.readTree(doc)
+      for (k <- Seq("metric", "unit", "n_queries", "sf", "commit"))
+        assert(root.has(k), s"$label lacks $k")
+      assert(!root.has("calibration"), s"$label still has calibration")
+      assert(root.path("n_queries").asInt(-1) == names.size, label)
+      assert(math.abs(root.path("value").asDouble(-1) - live) < 1e-3, label)
+      assert(math.abs(root.path("value_retimed").asDouble(-1) - liveRetimed) < 1e-3, label)
+      assert(root.path("retimed").size == Bench.MaxRetimes, label)
+    }
+    assert(om.readTree(full).path("queries").size == names.size)
+    // the line keeps a slowest-first prefix of the readings
+    val kept = om.readTree(line).path("queries")
+    assert(kept.size > 0 && kept.size < names.size, s"line kept ${kept.size}")
+    val slowest = results.sortBy(-_._2).take(kept.size).map(_._1)
+    assert(slowest.forall(kept.has), "line must keep the slowest readings")
   }
 
   test("BenchRefs drift rot-gate: every ref within 3x of committed bench_full.json") {
@@ -81,64 +77,29 @@ class ToolingSpec extends SparkSpec {
     // still describe the engine's steady state. Gate: each ref must be
     // within 3x (either direction, +0.75 s slack — aligned with
     // suspectsOf, see below) of the committed bench_full.json reading
-    // normalized by the FLOORED host_scale max(1, hs) — the artifact
-    // regenerated by every refresh_gates run, so a perf change that
-    // moves a query without a ref update fails HERE.
+    // — the artifact regenerated by every refresh_gates run, so a perf
+    // change that moves a query without a ref update fails HERE.
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val f = new java.io.File("bench_full.json")
     assert(f.exists(), "bench_full.json missing — run graft.Bench")
     val root = om.readTree(f)
-    val hs = root.path("calibration").path("host_scale").asDouble(1.0)
-    assert(hs > 0.2 && hs < 5.0, s"implausible host_scale $hs")
-    // normalize by each query's SEGMENT scale (value_cal_seg
-    // promotion, r15 verdict #3) — the adjudication must price a
-    // query against what the host delivered while IT ran, exactly as
-    // Bench.suspectsOf now does, or the two instruments reopen a dead
-    // band between them on runs with localized degradation. The
-    // artifact's `queries` map preserves run order (sorted by name),
-    // so a query's index locates its [from,to) segment. Scales are
-    // FLOORED at 1 like suspectsOf: a sub-1.0 scale must not inflate
-    // readings (with hs=0.833, a raw 0.80 s text_bpe excursion is
-    // below the 0.818 s retime trigger yet 0.80/0.833=0.96 would
-    // exceed 3*ref+0.75 — a no-code-change suite failure).
-    val segs = {
-      val sn = root.path("segments")
-      (0 until sn.size()).map { i =>
-        val s = sn.get(i)
-        (s.path("from").asInt(), s.path("to").asInt(),
-          s.path("scale").asDouble(-1.0))
-      }
-    }
-    def scaleAt(idx: Int): Double = {
-      val segScale = segs.find(s => idx >= s._1 && idx < s._2)
-        .map(_._3).filter(_ > 0).getOrElse(hs)
-      math.max(1.0, segScale)
-    }
-    val it = root.path("queries").fields()
-    val normalized = scala.collection.mutable.Map.empty[String, Double]
-    var qi = 0
-    while (it.hasNext) {
-      val e = it.next()
-      normalized(e.getKey) = e.getValue.asDouble / scaleAt(qi)
-      qi += 1
-    }
+    val readings = scala.collection.mutable.Map.empty[String, Double]
+    root.path("queries").fields().forEachRemaining(e =>
+      readings(e.getKey) = e.getValue.asDouble)
     // adjudicate like the headline does: when the retime pass re-ran a
     // suspect, the BETTER reading is the engine's steady state — a
     // reproduced regression keeps its high second reading and still
-    // fails below. Retimes run after the last calibration block, so
-    // the whole-run scale is the honest normalizer for them.
-    val scale = math.max(1.0, hs)
-    val rit = root.path("retimed").fields()
-    while (rit.hasNext) {
-      val e = rit.next(); val r = e.getValue.asDouble / scale
-      if (r > 0 && normalized.get(e.getKey).exists(r < _))
-        normalized(e.getKey) = r
+    // fails below.
+    root.path("retimed").fields().forEachRemaining { e =>
+      val r = e.getValue.asDouble
+      if (r > 0 && readings.get(e.getKey).exists(r < _))
+        readings(e.getKey) = r
     }
     // driftOutliers skips refs missing from the artifact or with
     // non-positive readings — assert COVERAGE separately so the gate
     // cannot erode query-by-query as timings fail (review finding r14)
     val uncovered = BenchRefs.calm.keySet
-      .filterNot(n => normalized.get(n).exists(_ > 0))
+      .filterNot(n => readings.get(n).exists(_ > 0))
     assert(uncovered.isEmpty,
       s"calm refs with no positive bench_full.json reading (drift-unchecked): ${uncovered.toSeq.sorted.mkString(",")}")
     // slack 0.75 (not driftOutliers' 0.3 default) — aligned with
@@ -152,11 +113,11 @@ class ToolingSpec extends SparkSpec {
     // re-pin) still fires: the slack only exempts refs so small that
     // they cannot mis-adjudicate the 3x-class excursions the retime
     // trigger handles.
-    val out = BenchRefs.driftOutliers(normalized.toMap, slackSec = 0.75)
+    val out = BenchRefs.driftOutliers(readings.toMap, slackSec = 0.75)
     assert(out.isEmpty,
       s"calm refs drifted >3x from the committed bench_full.json (re-pin " +
         s"from a calm run or revert the unflagged perf change): " +
-        out.map(n => s"$n ref=${BenchRefs.calm(n)} bench=${normalized(n)}")
+        out.map(n => s"$n ref=${BenchRefs.calm(n)} bench=${readings(n)}")
           .mkString(", "))
     // the detector FIRES on a 5x perturbation, both directions — AT
     // THE GATE'S OWN slack (0.75), so the regression proof tests the
@@ -168,7 +129,7 @@ class ToolingSpec extends SparkSpec {
     // Both use the largest ref (dd_tfidf_cos): the stale-ref arm fires
     // when ref > 3*v + slack, i.e. at v = ref/5 it needs
     // ref > (5/2)*slack = 1.875 s — the only calm ref above that.
-    val base = normalized.toMap
+    val base = readings.toMap
     assert(BenchRefs.driftOutliers(
       base.updated("dd_tfidf_cos", BenchRefs.calm("dd_tfidf_cos") * 5),
       slackSec = 0.75)
@@ -233,7 +194,11 @@ class ToolingSpec extends SparkSpec {
     assert(root.path("action").asText == "test-sweep")
     assert(root.path("n_queries").asInt(-1) == 3)
     assert(root.path("n_failed").asInt(-1) == 2)
-    assert(root.path("host_scale").asDouble(-1) == 1.0)
+    // bounds compare raw seconds: no host-speed field rides along
+    val fields = scala.collection.mutable.Set.empty[String]
+    root.fieldNames().forEachRemaining(f => fields += f)
+    assert(fields == Set("action", "schema_dir", "n_queries", "n_failed",
+      "queries", "commit", "ts"), fields)
     val q = root.path("queries")
     assert(q.path("fine").asText.matches("ok:3:[0-9.]+s"), q)
     assert(q.path("throws").asText ==

@@ -27,8 +27,7 @@ class ChangelogPropertySpec extends SparkSpec {
   test("update-mode reconstruction matches the diff model (seeded random)") {
     val rnd = new scala.util.Random(7)
     for (scenario <- 1 to 2) {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"chlogp$scenario").toString
+      val tmp = graft.TestSpark.tempDir(s"chlogp$scenario")
       val (snap, clog) = (s"$tmp/snap", s"$tmp/clog")
       var state = Map.empty[Long, Double]
       val want = mutable.ArrayBuffer.empty[(Long, String, Long, Double)]
@@ -59,8 +58,7 @@ class ChangelogPropertySpec extends SparkSpec {
   test("complete-mode reconstruction (incl. -D) matches the diff model") {
     val rnd = new scala.util.Random(11)
     for (scenario <- 1 to 2) {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"chlogc$scenario").toString
+      val tmp = graft.TestSpark.tempDir(s"chlogc$scenario")
       val (snap, clog) = (s"$tmp/snap", s"$tmp/clog")
       var state = Map.empty[Long, Double]
       val want = mutable.ArrayBuffer.empty[(Long, String, Long, Double)]

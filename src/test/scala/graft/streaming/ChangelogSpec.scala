@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ class ChangelogSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val base = Files.createTempDirectory("graft-cl").toString
+    val base = graft.TestSpark.tempDir("graft-cl")
     val input = MemoryStream[KeyedEvent]
     val agg = input.toDS().groupBy("key")
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_v"))
@@ -51,7 +50,7 @@ class ChangelogSpec extends SparkSpec {
     // a fresh insert forever and its updates never retracted
     val s = spark
     import s.implicits._
-    val base = Files.createTempDirectory("graft-cln").toString
+    val base = graft.TestSpark.tempDir("graft-cln")
     val b1 = Seq((1L, Option.empty[Double])).toDF("key", "mx")
     Changelog.processBatch(b1, Seq("key"), 0L, s"$base/snap", s"$base/log")
     val b2 = Seq((1L, Option(5.0))).toDF("key", "mx")
@@ -68,7 +67,7 @@ class ChangelogSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val base = Files.createTempDirectory("graft-cld").toString
+    val base = graft.TestSpark.tempDir("graft-cld")
     val input = MemoryStream[KeyedEvent]
     // top-2 keys by event count: a key dropping to rank 3 disappears
     // from the complete result -> must surface as a -D RowKind
@@ -124,7 +123,7 @@ class ChangelogSpec extends SparkSpec {
     // across many batches.
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-cl-free").toString
+    val base = graft.TestSpark.tempDir("graft-cl-free")
     val before = s.sparkContext.getPersistentRDDs.size
     (0 until 6).foreach { b =>
       val batch = Seq((1L, b.toDouble), (2L, b + 0.5)).toDF("key", "v")

@@ -29,7 +29,7 @@ class CheckpointSpec extends SparkSpec {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")),
         Seq(LocalCheckpointFileManager.ConfKey -> None, changelog -> Some("false"))))
     for (((both, firstOnly), i) <- inputs.zipWithIndex) withConfs(both) {
-      val ckpt = Files.createTempDirectory("graft-ckpt")
+      val ckpt = java.nio.file.Paths.get(graft.TestSpark.tempDir("graft-ckpt"))
       val input = MemoryStream[KeyedEvent]
       val agg = input.toDS().groupBy("key")
         .agg(count(lit(1)).as("cnt"), sum("value").as("sum_v"))
@@ -83,7 +83,7 @@ class CheckpointSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     import SeqPattern._
-    val ckpt = Files.createTempDirectory("graft-cep-ckpt").toString
+    val ckpt = graft.TestSpark.tempDir("graft-cep-ckpt")
     val steps = Seq(Step("a", Set("A")), Step("b", Set("B")))
     val input = MemoryStream[KeyedEvent]
     def stream = SeqPattern.detectOrdered(
@@ -134,7 +134,7 @@ class CheckpointSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val ckpt = Files.createTempDirectory("graft-fun-ckpt").toString
+    val ckpt = graft.TestSpark.tempDir("graft-fun-ckpt")
     val input = MemoryStream[KeyedEvent]
     def stream = StatefulOps.funnelTrack(
       input.toDS().withWatermark("ts", "5 seconds").as[KeyedEvent],
@@ -176,7 +176,7 @@ class CheckpointSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val ckpt = Files.createTempDirectory("graft-punct-ckpt").toString
+    val ckpt = graft.TestSpark.tempDir("graft-punct-ckpt")
     val T0 = 1585015920000L
     val input = MemoryStream[KeyedEvent]
     def stream = PunctuatedWindows.tumbling(input.toDS(),

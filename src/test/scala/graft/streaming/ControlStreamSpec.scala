@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -12,7 +11,7 @@ class ControlStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val rulesDir = Files.createTempDirectory("graft-rules").toString + "/rules"
+    val rulesDir = graft.TestSpark.tempDir("graft-rules") + "/rules"
     val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     val input = MemoryStream[KeyedEvent]
     val q = StreamPipelines.controlledFilter(

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -23,7 +22,7 @@ class CurationJourneySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val sink = Files.createTempDirectory("graft-curation").toString + "/stats"
+    val sink = graft.TestSpark.tempDir("graft-curation") + "/stats"
     val in = MemoryStream[(Long, String, String, Timestamp)]
     val stats = in.toDF().toDF("doc_id", "text", "lang", "ts")
       .withWatermark("ts", "5 seconds")

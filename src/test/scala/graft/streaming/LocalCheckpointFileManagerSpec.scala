@@ -15,7 +15,7 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
 
   private def withManager(f: (CheckpointFileManager, JPath) => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-cfm")
+    val dir = java.nio.file.Paths.get(graft.TestSpark.tempDir("graft-cfm"))
     f(new LocalCheckpointFileManager(new Path(dir.toUri), hadoopConf), dir)
   }
 
@@ -70,7 +70,7 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
   }
 
   test("the engine's session conf selects the manager for local checkpoints") {
-    val dir = Files.createTempDirectory("graft-cfm").toString
+    val dir = graft.TestSpark.tempDir("graft-cfm")
     assert(CheckpointFileManager.create(new Path(dir), hadoopConf)
       .isInstanceOf[LocalCheckpointFileManager])
   }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{count, lit, sum}
@@ -34,7 +33,7 @@ class StreamingSoakSpec extends SparkSpec {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       import SeqPattern._
-      val ckpt = Files.createTempDirectory("graft-soak-ckpt").toString
+      val ckpt = graft.TestSpark.tempDir("graft-soak-ckpt")
       val steps = Seq(Step("a", Set("A")), Step("b", Set("B")),
         Step("c", Set("C")))
       val input = MemoryStream[KeyedEvent]
@@ -102,9 +101,9 @@ class StreamingSoakSpec extends SparkSpec {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
-      val ckpt = Files.createTempDirectory("graft-soak-cl-ckpt").toString
-      val snap = Files.createTempDirectory("graft-soak-cl").toString + "/snap"
-      val clog = Files.createTempDirectory("graft-soak-cl").toString + "/clog"
+      val ckpt = graft.TestSpark.tempDir("graft-soak-cl-ckpt")
+      val snap = graft.TestSpark.tempDir("graft-soak-cl") + "/snap"
+      val clog = graft.TestSpark.tempDir("graft-soak-cl") + "/clog"
       val input = MemoryStream[KeyedEvent]
       def start() = Changelog.attach(
           input.toDS().groupBy("key")
@@ -177,8 +176,8 @@ class StreamingSoakSpec extends SparkSpec {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
-      val ckpt = Files.createTempDirectory("graft-soak-cm-ckpt").toString
-      val base = Files.createTempDirectory("graft-soak-cm").toString
+      val ckpt = graft.TestSpark.tempDir("graft-soak-cm-ckpt")
+      val base = graft.TestSpark.tempDir("graft-soak-cm")
       val snap = base + "/snap"
       val clog = base + "/clog"
       val input = MemoryStream[KeyedEvent]
@@ -247,7 +246,7 @@ class StreamingSoakSpec extends SparkSpec {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       val B = 86400000L // epoch-adjacent windows distort the initial WM
-      val ckpt = Files.createTempDirectory("graft-soak-late-ckpt").toString
+      val ckpt = graft.TestSpark.tempDir("graft-soak-late-ckpt")
       val input = MemoryStream[KeyedEvent]
       def stream = LateWindow.tumbling(input.toDS(),
         windowMs = 10000L, delayMs = 5000L, latenessMs = 10000L)
@@ -317,7 +316,7 @@ class StreamingSoakSpec extends SparkSpec {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       import SeqPattern._
-      val ckpt = Files.createTempDirectory("graft-soak-churn").toString
+      val ckpt = graft.TestSpark.tempDir("graft-soak-churn")
       val steps = Seq(Step("a", Set("A")), Step("b", Set("B")).any,
         Step("c", Set("C")))
       val input = MemoryStream[KeyedEvent]
