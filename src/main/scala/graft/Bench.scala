@@ -31,8 +31,8 @@ object Bench {
     "sf([0-9.]+)".r.findFirstMatchIn(dir)
       .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
 
-  /** 3-decimal artifact formatting, shared with ScalingProbe so the
-    * two JSON artifacts round identically. */
+  /** 3-decimal artifact formatting, shared with the Scaling and Sweep
+    * tools so their JSON artifacts round identically. */
   private[graft] def fmt3(v: Double): String =
     BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -134,8 +134,6 @@ object Bench {
     // 0.22→2.02 s) whose isolated warm runs were unchanged.
     // Warm-then-time per query guarantees the timed run hits a
     // compiled plan no matter how the cache is sized.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
-    val doWarm = new java.io.File(warmDir).isDirectory
     // Pay accumulated GC debt OUTSIDE the timed window: with one timed
     // run per query in a single long session, a collection triggered
     // by query N's garbage otherwise lands in query N+1's measurement
@@ -149,8 +147,7 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
     }
     val results = selected.keys.toSeq.sorted.map { name =>
-      if (doWarm)
-        try selected(name)(spark, warmDir).count() catch { case _: Throwable => () }
+      try selected(name)(spark, sfDir).count() catch { case _: Throwable => () }
       name -> time(name)
     }
     // Suspect-retime pass (r12 verdict task #1): a single-query

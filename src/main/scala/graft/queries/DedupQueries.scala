@@ -20,7 +20,7 @@ object DedupQueries extends GroupBase {
   private val R = 4
 
   /** dd_jaccard / dd_containment's blocked (doc_id, n, sh) relation,
-    * factored out so ScalingPair's candidate-growth gate measures the
+    * factored out so Scaling pair mode's candidate-growth gate measures the
     * SAME generator the queries run (shared shingle width and
     * rare-shingle cap — a change here moves query and gate together,
     * so the gate can never silently attest a stale generator). */
@@ -36,7 +36,7 @@ object DedupQueries extends GroupBase {
         explode(col("hs")).as("sh")), "sh", ShingleCap)
 
   /** dd_tfidf_cos's MATERIALIZATION stage, factored out so
-    * ScalingPair's two-point curve can attribute the query's wall
+    * Scaling pair mode's two-point curve can attribute the query's wall
     * between checkpoint build and pair math (r14 verdict #4). Builds
     * and EAGERLY localCheckpoints:
     *

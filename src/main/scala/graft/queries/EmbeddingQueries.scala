@@ -283,7 +283,7 @@ object EmbeddingQueries extends GroupBase {
 
   /** Brute-force ground truth for the neardup pair set: every pair
     * with cosine >= 0.35, no blocking. O(N²) by construction — ONLY
-    * for recall measurement at small scale (ScalingPair's recall
+    * for recall measurement at small scale (Scaling pair mode's recall
     * gate at sf0.01; never a catalog query). */
   private[graft] def bruteNeardupPairs(e: DataFrame): DataFrame =
     e.as("x").join(e.as("y"), col("x.vec_id") < col("y.vec_id"))

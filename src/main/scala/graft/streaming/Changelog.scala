@@ -65,7 +65,7 @@ object Changelog {
     * ContextCleaner's next periodic GC: the checkpointed data IS the
     * cached RDD behind the plan's LogicalRDD leaf. Safe post-use — no
     * later action references the batch. (Shared idiom — see
-    * core.Resources.freeCheckpoint; ScalingPair's tfidf curve uses
+    * core.Resources.freeCheckpoint; Scaling pair mode's tfidf curve uses
     * the same release for its checkpoint-cost probes.) */
   private def freeCheckpoint(df: DataFrame): Unit =
     graft.core.Resources.freeCheckpoint(df)

@@ -2,10 +2,11 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.core.Sessions
+import org.apache.spark.sql.SparkSession
 
 /** Full-projection execution gate — closes the `count()` blind spot.
   *
-  * Bench and ScalingProbe drive every query with `count()`, which lets
+  * Bench and Scaling drive every query with `count()`, which lets
   * Catalyst PRUNE the final projection: an expression that only
   * overflows/NPEs/diverges when its output column is actually computed
   * never executes. That is exactly how the round-9
@@ -26,33 +27,43 @@ import graft.core.Sessions
   * query failed, so this can sit in a gate script next to check.py.
   */
 object FullExec {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outJson = if (args.length > 1) args(1) else "FULLEXEC.json"
-    val spark = Sessions.build("graft-fullexec")
-    graft.Bench.warmJvm(spark)
-
+  /** Noop-writes every catalog query at `sfDir`, logging each failure
+    * under `tag`. Returns the artifact's `n_queries`, `n_failed` and
+    * `queries` fields, and the failure count. */
+  private[tools] def run(spark: SparkSession, sfDir: String,
+                         tag: String): (String, Int) = {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val err =
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           None
         } catch { case e: Throwable =>
-          val m = String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(200)
-          System.err.println(s"[fullexec] $name FAILED: $m")
+          val m = (e.getClass.getSimpleName + ": " +
+            String.valueOf(e.getMessage)).replaceAll("\\s+", " ").take(200)
+          System.err.println(s"[$tag] $name FAILED: $m")
           Some(m)
         }
       name -> err
     }
     val failed = results.count(_._2.isDefined)
-    def esc(s: String) = SweepJson.esc(s)
     val entries = results.map { case (n, err) =>
-      s""""$n":${err.fold("\"ok\"")(m => s""""error: ${esc(m)}"""")}"""
+      s""""$n":${err.fold("\"ok\"")(m => s""""error: ${SweepJson.esc(m)}"""")}"""
     }.mkString("{", ",", "}")
+    (s""""n_queries":${results.size},"n_failed":$failed,"queries":$entries""", failed)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
+    val outJson = if (args.length > 1) args(1) else "FULLEXEC.json"
+    val spark = Sessions.build("graft-fullexec")
+    graft.Bench.warmJvm(spark)
+
+    val (fields, failed) = run(spark, sfDir, "fullexec")
     val json =
-      s"""{"action":"noop-write-full-projection","sf_dir":"${esc(sfDir)}","n_queries":${results.size},"n_failed":$failed,"queries":$entries,${graft.core.Provenance.jsonFields}}"""
+      s"""{"action":"noop-write-full-projection","sf_dir":"${SweepJson.esc(sfDir)}",$fields,${graft.core.Provenance.jsonFields}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson), json.getBytes("UTF-8"))
-    println(s"[fullexec] ${results.size - failed}/${results.size} full-projection ok at $sfDir -> $outJson")
+    val n = SparkEntry.queries.size
+    println(s"[fullexec] ${n - failed}/$n full-projection ok at $sfDir -> $outJson")
     spark.stop()
     if (failed > 0) sys.exit(1)
   }

@@ -46,28 +46,12 @@ object MemExec {
     val spark = Sessions.build("graft-memexec")
     graft.Bench.warmJvm(spark)
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val err =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          None
-        } catch { case e: Throwable =>
-          val m = (e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage)).replaceAll("\\s+", " ").take(200)
-          System.err.println(s"[memexec] $name FAILED: $m")
-          Some(m)
-        }
-      name -> err
-    }
-    val failed = results.count(_._2.isDefined)
-    def esc(s: String) = SweepJson.esc(s)
-    val entries = results.map { case (n, err) =>
-      s""""$n":${err.fold("\"ok\"")(m => s""""error: ${esc(m)}"""")}"""
-    }.mkString("{", ",", "}")
+    val (fields, failed) = FullExec.run(spark, sfDir, "memexec")
     val json =
-      s"""{"action":"bounded-memory-full-projection","sf_dir":"${esc(sfDir)}","heap_mb":$heapMb,"cpus":${Sessions.cpus},"n_queries":${results.size},"n_failed":$failed,"queries":$entries,${graft.core.Provenance.jsonFields}}"""
+      s"""{"action":"bounded-memory-full-projection","sf_dir":"${SweepJson.esc(sfDir)}","heap_mb":$heapMb,"cpus":${Sessions.cpus},$fields,${graft.core.Provenance.jsonFields}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson), json.getBytes("UTF-8"))
-    println(s"[memexec] ${results.size - failed}/${results.size} ok in a ${heapMb} MB heap at $sfDir -> $outJson")
+    val n = SparkEntry.queries.size
+    println(s"[memexec] ${n - failed}/$n ok in a ${heapMb} MB heap at $sfDir -> $outJson")
     spark.stop()
     if (failed > 0) sys.exit(1)
   }

@@ -148,7 +148,7 @@ class CappedBucketSpec extends SparkSpec {
     // under-dedup regime the cap itself created)
     val ids = (0L until 300L).toSeq
     val pairs = pairsOf(flood(300, 0L, 1.0f), cap = 8, coarse = 4)
-    val comps = graft.tools.ScalingPair.componentCount(ids, pairs)
+    val comps = graft.tools.Scaling.componentCount(ids, pairs)
     assert(comps == 1, s"flood cluster split into $comps components")
     // the linear candidate bound must survive the chains: ≤ N(cap−1)/2
     // packed pairs + O(N/cap) chain links (generously: + N)
@@ -173,7 +173,7 @@ class CappedBucketSpec extends SparkSpec {
     val b = flood(150, 1000L, -1.0f)
     val ids = (0L until 150L) ++ (1000L until 1150L)
     val pairs = pairsOf(a.unionByName(b), cap = 8, coarse = 4)
-    val comps = graft.tools.ScalingPair.componentCount(ids, pairs)
+    val comps = graft.tools.Scaling.componentCount(ids, pairs)
     assert(comps == 2, s"expected 2 components (one per cluster), got $comps")
   }
 

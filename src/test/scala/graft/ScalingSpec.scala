@@ -1,10 +1,10 @@
 package graft
 
-import graft.tools.ScalingProbe
+import graft.tools.Scaling
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** ScalingProbe promoted from informational readout to GATE (round-10
+/** The scaling probe promoted from informational readout to GATE (round-10
   * verdict #7). Three layers:
   *
   *   1. the flag predicate itself (the same `isFlagged` the artifact
@@ -24,22 +24,22 @@ class ScalingSpec extends SparkSpec {
   test("flag predicate: superlinear+slow flagged; noise and fast queries not") {
     val dataRatio = 10.0
     // quadratic signature at 10x data: ~100x time, well over 2x threshold
-    assert(ScalingProbe.isFlagged(ratio = 95.0, largeSec = 3.0, dataRatio))
+    assert(Scaling.isFlagged(ratio = 95.0, largeSec = 3.0, dataRatio))
     // linear query: ratio at/below the data ratio
-    assert(!ScalingProbe.isFlagged(ratio = 8.0, largeSec = 5.0, dataRatio))
+    assert(!Scaling.isFlagged(ratio = 8.0, largeSec = 5.0, dataRatio))
     // slightly above data ratio = cache/spill texture, not complexity
-    assert(!ScalingProbe.isFlagged(ratio = 19.9, largeSec = 5.0, dataRatio))
+    assert(!Scaling.isFlagged(ratio = 19.9, largeSec = 5.0, dataRatio))
     // overhead-dominated sub-half-second query: ratio is noise
-    assert(!ScalingProbe.isFlagged(ratio = 300.0, largeSec = 0.4, dataRatio))
+    assert(!Scaling.isFlagged(ratio = 300.0, largeSec = 0.4, dataRatio))
     // boundary: strictly-greater on both arms
-    assert(!ScalingProbe.isFlagged(ratio = 20.0, largeSec = 5.0, dataRatio))
-    assert(!ScalingProbe.isFlagged(ratio = 25.0, largeSec = 0.5, dataRatio))
+    assert(!Scaling.isFlagged(ratio = 20.0, largeSec = 5.0, dataRatio))
+    assert(!Scaling.isFlagged(ratio = 25.0, largeSec = 0.5, dataRatio))
   }
 
   test("committed scaling.json: zero flagged, zero failed, catalog rot-free") {
     val p = java.nio.file.Paths.get("scaling.json")
     assert(java.nio.file.Files.exists(p),
-      "scaling.json missing — run `sbt \"runMain graft.tools.ScalingProbe\"`")
+      "scaling.json missing — run `sbt \"runMain graft.tools.Scaling probe\"`")
     val txt = java.nio.file.Files.readString(p)
     val dataRatio = """"data_ratio":([0-9.eE+]+)""".r
       .findFirstMatchIn(txt).map(_.group(1).toDouble)
@@ -57,14 +57,14 @@ class ScalingSpec extends SparkSpec {
     val missing = inCatalog -- inArtifact
     val stale = inArtifact -- inCatalog
     assert(missing.isEmpty,
-      s"catalog queries never swept by ScalingProbe (regenerate scaling.json): ${missing.toSeq.sorted.mkString(",")}")
+      s"catalog queries never swept by Scaling probe (regenerate scaling.json): ${missing.toSeq.sorted.mkString(",")}")
     assert(stale.isEmpty,
       s"stale rows in scaling.json for queries no longer in the catalog: ${stale.toSeq.sorted.mkString(",")}")
 
     val failed = rows.filter(r => r._2 < 0 || r._3 < 0)
     assert(failed.isEmpty,
       s"queries failed during the sweep: ${failed.map(_._1).sorted.mkString(",")}")
-    val flagged = rows.filter(r => ScalingProbe.isFlagged(r._4, r._3, dataRatio))
+    val flagged = rows.filter(r => Scaling.isFlagged(r._4, r._3, dataRatio))
     assert(flagged.isEmpty,
       s"SUPERLINEAR queries at ${dataRatio}x data: " +
         flagged.map(r => f"${r._1} (${r._4}%.1fx)").sorted.mkString(","))
@@ -73,7 +73,7 @@ class ScalingSpec extends SparkSpec {
   test("committed scaling30.json: zero flagged, selection rot-free (30x point)") {
     val p = java.nio.file.Paths.get("scaling30.json")
     assert(java.nio.file.Files.exists(p),
-      "scaling30.json missing — run `sbt \"runMain graft.tools.Scaling30\"`")
+      "scaling30.json missing — run `sbt \"runMain graft.tools.Scaling x30\"`")
     val txt = java.nio.file.Files.readString(p)
     val dataRatio = """"data_ratio":([0-9.eE+]+)""".r
       .findFirstMatchIn(txt).map(_.group(1).toDouble)
@@ -91,11 +91,11 @@ class ScalingSpec extends SparkSpec {
     // rot: artifact set == the tool's live selection (which itself must
     // stay inside the catalog, and every exclusion must name a live
     // query — a dead exclusion means the family list rotted)
-    val sel = graft.tools.Scaling30.selected.toSet
+    val sel = graft.tools.Scaling.selected("x30").toSet
     assert(sel.subsetOf(SparkEntry.queries.keySet))
-    assert(graft.tools.Scaling30.PairMathExclusions
+    assert(graft.tools.Scaling.PairMathExclusions
       .subsetOf(SparkEntry.queries.keySet),
-      "Scaling30.PairMathExclusions names a query no longer in the catalog")
+      "Scaling.PairMathExclusions names a query no longer in the catalog")
     val inArtifact = rows.map(_._1).toSet
     assert((sel -- inArtifact).isEmpty,
       s"selected queries never swept (regenerate scaling30.json): ${(sel -- inArtifact).toSeq.sorted.mkString(",")}")
@@ -105,7 +105,7 @@ class ScalingSpec extends SparkSpec {
     val failed = rows.filter(r => r._2 < 0 || r._3 < 0)
     assert(failed.isEmpty,
       s"queries failed during the 30x sweep: ${failed.map(_._1).sorted.mkString(",")}")
-    val flagged = rows.filter(r => ScalingProbe.isFlagged(r._4, r._3, dataRatio))
+    val flagged = rows.filter(r => Scaling.isFlagged(r._4, r._3, dataRatio))
     assert(flagged.isEmpty,
       s"SUPERLINEAR queries at 30x data: " +
         flagged.map(r => f"${r._1} (${r._4}%.1fx)").sorted.mkString(","))
@@ -114,7 +114,7 @@ class ScalingSpec extends SparkSpec {
   test("committed scaling_pair.json: zero flagged, growth bounds hold, selection rot-free") {
     val p = java.nio.file.Paths.get("scaling_pair.json")
     assert(java.nio.file.Files.exists(p),
-      "scaling_pair.json missing — run `sbt \"runMain graft.tools.ScalingPair\"`")
+      "scaling_pair.json missing — run `sbt \"runMain graft.tools.Scaling pair\"`")
     val txt = java.nio.file.Files.readString(p)
     val dataRatio = """"data_ratio":([0-9.eE+]+)""".r
       .findFirstMatchIn(txt).map(_.group(1).toDouble)
@@ -130,9 +130,9 @@ class ScalingSpec extends SparkSpec {
     assert(rows.nonEmpty, "scaling_pair.json parsed to zero query rows")
 
     // rot: artifact set == the tool's live selection, inside the catalog
-    val sel = graft.tools.ScalingPair.selected.toSet
+    val sel = graft.tools.Scaling.selected("pair").toSet
     assert(sel.subsetOf(SparkEntry.queries.keySet),
-      "ScalingPair.selected names a query no longer in the catalog")
+      "Scaling.selected(pair) names a query no longer in the catalog")
     val inArtifact = rows.map(_._1).toSet
     assert((sel -- inArtifact).isEmpty,
       s"selected queries never swept (regenerate scaling_pair.json): ${(sel -- inArtifact).toSeq.sorted.mkString(",")}")
@@ -142,7 +142,7 @@ class ScalingSpec extends SparkSpec {
     val failed = rows.filter(r => r._2 < 0 || r._3 < 0)
     assert(failed.isEmpty,
       s"queries failed during the pair-math 30x sweep: ${failed.map(_._1).sorted.mkString(",")}")
-    val flagged = rows.filter(r => ScalingProbe.isFlagged(r._4, r._3, dataRatio))
+    val flagged = rows.filter(r => Scaling.isFlagged(r._4, r._3, dataRatio))
     assert(flagged.isEmpty,
       s"SUPERLINEAR pair-math queries at 30x data: " +
         flagged.map(r => f"${r._1} (${r._4}%.1fx)").sorted.mkString(","))
@@ -161,7 +161,7 @@ class ScalingSpec extends SparkSpec {
     // the r15 two-point dd_tfidf_cos curve (x3 and x9 documents
     // points + checkpoint/pair attribution) must stay in the artifact.
     // PRESENCE/SHAPE only: the curve is record-only by design
-    // (ScalingPair: a one-query x9 wall is not a bound you can assert
+    // (Scaling pair mode: a one-query x9 wall is not a bound you can assert
     // without flaking the refresh) and -1 is the documented encoding
     // of a failed x9 timing — gating on positivity here would turn
     // the record-only instrument back into a suite gate that a single
@@ -200,9 +200,9 @@ class ScalingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def toks(df: DataFrame): Seq[String] =
       df.select(explode(split(col("text"), " "))).as[String].collect().toSeq
-    val c0 = graft.tools.ScalingPair.remapDocuments(base, 0)
-    val c1 = graft.tools.ScalingPair.remapDocuments(base, 1)
-    val c2 = graft.tools.ScalingPair.remapDocuments(base, 2)
+    val c0 = graft.tools.Scaling.remapDocuments(base, 0)
+    val c1 = graft.tools.Scaling.remapDocuments(base, 1)
+    val c2 = graft.tools.Scaling.remapDocuments(base, 2)
     // copy 0 IS the base
     assert(c0.collect().toList == base.collect().toList)
     // cross-copy token spaces are disjoint (the linear-candidates
@@ -215,7 +215,7 @@ class ScalingSpec extends SparkSpec {
       s"copy-1 tokens are not a suffix-rename of the base: ${toks(c1)}")
     assert(toks(c1).forall(_.endsWith("~1")))
     // doc_ids land in the per-copy band
-    val off = graft.tools.ScalingPair.KeyOffset
+    val off = graft.tools.Scaling.KeyOffset
     assert(c2.select("doc_id").as[Long].collect().forall(_ / off == 2))
     // the x9 pass composes remaps at offsets {0,3,6} over the x3
     // output — these offsets are the ONLY x9-specific construction
@@ -223,8 +223,8 @@ class ScalingSpec extends SparkSpec {
     // x9 breakage records -1 without failing the suite, by design),
     // this unit coverage is what pins them: suffix spaces and bands
     // must stay pairwise disjoint at the composed offsets too
-    val c3 = graft.tools.ScalingPair.remapDocuments(base, 3)
-    val c6 = graft.tools.ScalingPair.remapDocuments(base, 6)
+    val c3 = graft.tools.Scaling.remapDocuments(base, 3)
+    val c6 = graft.tools.Scaling.remapDocuments(base, 6)
     assert(toks(c3).toSet.intersect(toks(c6).toSet).isEmpty)
     assert(toks(c3).toSet.intersect(toks(base).toSet).isEmpty)
     assert(toks(c6).forall(_.endsWith("~6")))
@@ -235,11 +235,11 @@ class ScalingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k1", "k2", "v")
-    val ext = graft.tools.Scaling30.extend(df, Seq("k1", "k2"), 3).collect()
+    val ext = graft.tools.Scaling.extend(df, Seq("k1", "k2"), 3).collect()
     assert(ext.length == 6)
     assert(ext.map(_.getLong(0)).distinct.length == 6, "k1 must stay unique")
     // FK alignment: both key columns land in the SAME per-copy band
-    val off = graft.tools.Scaling30.KeyOffset
+    val off = graft.tools.Scaling.KeyOffset
     assert(ext.forall(r => r.getLong(0) / off == r.getLong(1) / off),
       s"k1/k2 copy bands diverged: ${ext.toList}")
     assert(ext.map(_.getLong(0) / off).groupBy(identity)
@@ -268,18 +268,18 @@ class ScalingSpec extends SparkSpec {
     // bounds the ratio below at (f + 16*3f) / 4f = 12.25x.
     // Expected ratios: quadratic ~dataRatio^2 = 16x vs threshold 8x;
     // linear ~dataRatio = 4x. Both margins are 2x.
-    val fixedCost = ScalingProbe.timeOnce(quadratic(16))
+    val fixedCost = Scaling.timeOnce(quadratic(16))
     val minSmall = math.max(0.4, 4 * fixedCost)
     def measureQuadratic(): (Long, Double, Double) = {
       var n = 2000L
-      var tSmallQ = ScalingProbe.timeOnce(quadratic(n))
+      var tSmallQ = Scaling.timeOnce(quadratic(n))
       while (tSmallQ < minSmall && n < 64000L) {
         n *= 2
-        tSmallQ = ScalingProbe.timeOnce(quadratic(n))
+        tSmallQ = Scaling.timeOnce(quadratic(n))
       }
       assert(tSmallQ >= minSmall,
         s"calibration failed: $tSmallQ s at n=$n (fixed cost $fixedCost s)")
-      (n, tSmallQ, ScalingProbe.timeOnce(quadratic((n * dataRatio).toLong)))
+      (n, tSmallQ, Scaling.timeOnce(quadratic((n * dataRatio).toLong)))
     }
     // ONE retry: a scheduler stall during the small run inflates
     // tSmallQ, passes the >=0.4 s calibration spuriously, and
@@ -287,7 +287,7 @@ class ScalingSpec extends SparkSpec {
     // 0.44 s at an n whose steady reading is ~0.05 s → ratio 1.4x).
     // A genuine detector regression fails BOTH independent attempts.
     var meas = measureQuadratic()
-    if (!ScalingProbe.isFlagged(meas._3 / meas._2, meas._3, dataRatio)) {
+    if (!Scaling.isFlagged(meas._3 / meas._2, meas._3, dataRatio)) {
       val first = meas
       info(f"retrying: first attempt n=${first._1} small ${first._2}%.2fs large ${first._3}%.2fs not flagged")
       meas = measureQuadratic()
@@ -306,15 +306,15 @@ class ScalingSpec extends SparkSpec {
     val (n, tSmallQ, tLargeQ) = meas
     val qRatio = tLargeQ / tSmallQ
     info(f"fixed cost $fixedCost%.2fs; n=$n small $tSmallQ%.2fs large $tLargeQ%.2fs ratio $qRatio%.1fx")
-    assert(ScalingProbe.isFlagged(qRatio, tLargeQ, dataRatio),
+    assert(Scaling.isFlagged(qRatio, tLargeQ, dataRatio),
       f"quadratic probe NOT flagged twice: small $tSmallQ%.2fs large $tLargeQ%.2fs ratio $qRatio%.1fx (threshold ${2 * dataRatio}%.0fx) — the scaling gate cannot fire")
 
     // linear control with the same total work as the small quadratic
     val m = n * n
-    val tSmallL = ScalingProbe.timeOnce(linear(m))
-    val tLargeL = ScalingProbe.timeOnce(linear((m * dataRatio).toLong))
+    val tSmallL = Scaling.timeOnce(linear(m))
+    val tLargeL = Scaling.timeOnce(linear((m * dataRatio).toLong))
     val lRatio = tLargeL / tSmallL
-    assert(!ScalingProbe.isFlagged(lRatio, tLargeL, dataRatio),
+    assert(!Scaling.isFlagged(lRatio, tLargeL, dataRatio),
       f"linear control FLAGGED: small $tSmallL%.2fs large $tLargeL%.2fs ratio $lRatio%.1fx — the gate would mass-flag linear queries")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Unit pins for the bench and sweep tooling: Bench's suspect-retime
   * trigger and stdout-line rendering, the BenchRefs drift rot-gate, the
-  * Sweep loop and the huge-value corruption generator
+  * Sweep and Scaling loops and the huge-value corruption generator
   * (Sweep.corruptHuge). Each adjudicates other results — a retime pass
   * that never fires, a stdout line that truncates, or a sweep that
   * silently corrupts nothing would invalidate conclusions downstream,
@@ -204,6 +204,36 @@ class ToolingSpec extends SparkSpec {
     assert(q.path("throws").asText ==
       "error: IllegalStateException: bad cell a\u0000b\u001b[0m", q)
     assert(q.path("over_bound").asText.matches("slow:2:[0-9.]+s>bound:1.0E-6"), q)
+  }
+
+  test("Scaling.run: a failed reading records -1 and fails the verdict") {
+    // the one timed loop of the three scaling gates: a query that throws
+    // must reach the artifact as -1 on small, large and ratio, and must
+    // fail the run, as ScalingSpec requires of every committed artifact
+    val linear: graft.tools.Sweep.QueryFn =
+      (s, d) => s.range(if (d == "small") 1000L else 10000L).toDF("a")
+    val queries: Seq[(String, graft.tools.Sweep.QueryFn)] = Seq(
+      "linear" -> linear,
+      "throws" -> ((_, _) => throw new IllegalStateException("bad plan")))
+    val (json, ok) = graft.tools.Scaling.run(spark, "probe", "small", "large",
+      10.0, queries)
+    assert(!ok, "a -1 reading must fail the run")
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val fields = scala.collection.mutable.Set.empty[String]
+    root.fieldNames().forEachRemaining(f => fields += f)
+    assert(fields == Set("action", "data_ratio", "n_queries", "n_flagged",
+      "queries", "commit", "ts"), fields)
+    assert(root.path("n_queries").asInt(-1) == 2)
+    assert(root.path("n_flagged").asInt(-1) == 0)
+    assert(root.path("data_ratio").asDouble == 10.0)
+    val q = root.path("queries")
+    Seq("small", "large", "ratio").foreach { k =>
+      assert(q.path("throws").path(k).asDouble == -1.0, q)
+      assert(q.path("linear").path(k).asDouble >= 0, q)
+    }
+    // the same loop without the failing query passes
+    assert(graft.tools.Scaling.run(spark, "probe", "small", "large", 10.0,
+      Seq("linear" -> linear))._2)
   }
 
   test("HugeExec.corrupt inflates the advertised columns, deterministically") {

@@ -39,9 +39,9 @@ fi
 log "done: MemExec"
 run CodegenParity "graft.tools.CodegenParity /root/testdata/sf0.01 CODEGEN_PARITY.json" "parity|\[codegen"
 run FullExec      "graft.tools.FullExec /root/testdata/sf0.1 FULLEXEC.json"            "\[fullexec\]"
-run ScalingProbe  "graft.tools.ScalingProbe"                                           "\[scaling|scaling.json"
-run Scaling30     "graft.tools.Scaling30"                                              "\[scaling30\]"
-run ScalingPair   "graft.tools.ScalingPair"                                            "\[scalingpair\]"
+run Scaling-probe "graft.tools.Scaling probe"                                          "\[scaling|scaling.json"
+run Scaling-x30   "graft.tools.Scaling x30"                                            "\[scaling30\]"
+run Scaling-pair  "graft.tools.Scaling pair"                                           "\[scalingpair\]"
 run StateSize     "graft.tools.StateSize"                                              "\[statesize\]"
 log "start: Bench sf0.1"
 # Capture to a temp file and test sbt's exit status and the metric line
