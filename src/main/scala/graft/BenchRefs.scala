@@ -62,9 +62,9 @@ object BenchRefs {
     "dd_winnow"->1.073, "emb_binary"->0.313, "emb_centroid"->0.149,
     "emb_ch_index"->0.642, "emb_decontam"->0.201, "emb_drift"->0.270,
     "emb_hardneg"->0.388, "emb_ivf_assign"->0.223, "emb_ivf_knn"->0.385,
-    "emb_ivfpq"->0.695, "emb_kcenter"->0.722, "emb_kmeans"->0.370,
+    "emb_ivfpq"->0.695, "emb_kcenter"->0.166, "emb_kmeans"->0.370,
     "emb_knn"->0.234, "emb_knn_graph"->1.037, "emb_lsh_buckets"->0.256,
-    "emb_matryoshka"->0.424, "emb_mips"->0.201, "emb_mmr"->0.986,
+    "emb_matryoshka"->0.424, "emb_mips"->0.201, "emb_mmr"->0.257,
     "emb_mrr"->1.041, "emb_neardup"->0.664, "emb_norms"->0.058,
     "emb_pca"->0.699, "emb_pca_scores"->0.788, "emb_pq"->0.407,
     "emb_probe"->1.345, "emb_purity"->0.725, "emb_recall"->0.706,
@@ -73,7 +73,7 @@ object BenchRefs {
     "fn_convert"->0.066, "fn_geo"->0.075, "fn_json"->0.062,
     "fn_math"->0.065, "fn_nested"->0.075, "fn_regex"->0.055,
     "fn_string"->0.066, "fn_temporal"->0.062, "graph_assortativity"->0.492,
-    "graph_bfs"->0.252, "graph_cc"->0.226, "graph_domainrank"->0.922,
+    "graph_bfs"->0.067, "graph_cc"->0.063, "graph_domainrank"->0.922,
     "graph_hits"->1.147, "graph_kcore"->0.564, "graph_lpa"->0.246,
     "graph_pagerank"->0.409, "graph_ppr"->1.118, "graph_reciprocity"->0.294,
     "graph_triangles"->0.158, "join_anti"->0.157, "join_asof"->0.124,

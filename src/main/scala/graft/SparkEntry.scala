@@ -34,16 +34,19 @@ object SparkEntry {
     *
     * Catalog contract (ADVICE r13): a query CONSTRUCTOR may execute
     * Spark jobs. Fourteen do (jobs per construction at sf0.1, from
-    * `perfbench/refs/profile-sf0.1.tsv`):
+    * `perfbench/refs/profile-sf0.1.tsv` unless noted):
     *   - a shared derived table behind `localCheckpoint()`, because
     *     column pruning re-specializes a multi-consumer subplan per
     *     consumer, which defeats AQE exchange reuse: dd_tfidf_cos (8),
     *     emb_mrr (6), emb_recall (6), pipe_dsir (2), pipe_ccnet (1),
     *     text_langid_nb (1), pipe_classify_train (1);
     *   - a loop-invariant base or a per-round result behind
-    *     `localCheckpoint()` in an unrolled iterative loop: emb_mmr
-    *     (19), emb_kcenter (15), agg_polish (14), graph_domainrank (10),
-    *     graph_ppr (7);
+    *     `localCheckpoint()` in an unrolled iterative loop: agg_polish
+    *     (14), graph_domainrank (10), graph_ppr (7);
+    *   - greedy picks collected to the driver, one top-1 job per round
+    *     plus the query-vector or seed collect: emb_mmr (5), emb_kcenter
+    *     (4) (counted at sf0.1 on the current shape, which the
+    *     committed profile predates);
     *   - ZipIndex's per-partition offset pass: rel_zip_index (3),
     *     agg_ntile (3).
     * Each needs its jobs done before the plan is handed back.

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Exact, ExactSql}
 
@@ -17,6 +17,14 @@ import graft.core.{Exact, ExactSql}
   * Expand operator (no extra scans). No collect-based paths.
   */
 object AggQueries extends GroupBase {
+
+  /** ρ of the HLL register: 27 minus the bit length of `h >> 6`, the
+    * hash bits above the 64-bucket index. Leading zeros go through the
+    * SQL `TRIM(LEADING '0' FROM ...)` form; the two-argument
+    * `ltrim(s, "0")` resolves through a signature Spark 4 deprecates,
+    * with a WARN in every session that runs it. */
+  private def hllRho: Column =
+    lit(27) - length(expr("trim(LEADING '0' FROM bin(shiftright(h, 6)))"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1-shaped pricing summary (reduceGroup/agg semantics,
@@ -276,8 +284,7 @@ object AggQueries extends GroupBase {
         .select(col("event_type"),
           graft.functions.TextOps.hash32(col("user_id").cast("string")).as("h"))
         .withColumn("bucket", pmod(col("h"), lit(64)))
-        .withColumn("rho",
-          lit(27) - length(ltrim(bin(shiftright(col("h"), 6)), "0")))
+        .withColumn("rho", hllRho)
       ev.groupBy("event_type", "bucket").agg(max(col("rho")).as("mx"))
         .groupBy("event_type")
         .agg(sum(pow(lit(2.0), -col("mx"))).as("s_ne"),
@@ -1003,8 +1010,7 @@ object AggQueries extends GroupBase {
           graft.functions.TextOps.hash32(col("user_id").cast("string")).as("h"),
           col("user_id"))
         .withColumn("bucket", pmod(col("h"), lit(64)))
-        .withColumn("rho",
-          lit(27) - length(ltrim(bin(shiftright(col("h"), 6)), "0")))
+        .withColumn("rho", hllRho)
       def estDf(regs: DataFrame, as: String): DataFrame = regs
         .agg(sum(pow(lit(2.0), -col("mx"))).as("s_ne"),
           count(lit(1)).as("v_ne"))

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StructField, StructType}
 import graft.functions.VectorFunctions
 import graft.core.Exact
 
@@ -950,11 +951,12 @@ object EmbeddingQueries extends GroupBase {
     // picker a fine-tune curation pass runs after retrieval): greedily
     // take K items maximizing 0.7·rel − 0.3·max-sim-to-selected, rel =
     // cosine to the query (vec_id 0). 100 TB shape: K bounded rounds,
-    // each ONE corpus scan — the selected set (≤K rows) broadcasts,
-    // per-candidate max-sim is a hash agg (max over ≤K doubles,
-    // order-free), and the argmax is a 1-row max_by (no global sort).
-    // Score weights are the literals 0.7/0.3 on BOTH engines (never
-    // 1−λ: 1-0.7 ≠ 0.3 in doubles), ties break to the lower vec_id.
+    // each ONE corpus scan with no exchange — the selected set (≤K
+    // rows) rides the driver as literal vectors, per-candidate max-sim
+    // is an inline `greatest` over ≤K cosines (order-free), and the
+    // argmax is a top-1 heap (TakeOrderedAndProject). Score weights
+    // are the literals 0.7/0.3 on BOTH engines (never 1−λ: 1-0.7 ≠ 0.3
+    // in doubles), ties break to the lower vec_id.
     "emb_mmr" -> ((s, d) => mmrSelect(s, d, k = 4)),
 
     // k-center / farthest-point-first coreset (greedy 2-approx cover;
@@ -1267,8 +1269,8 @@ object EmbeddingQueries extends GroupBase {
         rows += lossRowFrom(step - 1, g, w)
         // NOTE: a per-step localCheckpoint on the weight row was
         // measured 1.1 -> 1.3 s WORSE (3 eager jobs vs the cheap
-        // re-execution of 1-row assemblies); unlike emb_mmr, the
-        // geometric lineage here is all K-row/1-row stages.
+        // re-execution of 1-row assemblies): the geometric lineage
+        // here is all K-row/1-row stages.
         // coalesce(try_element_at): a PADDED vector (shape drift) emits
         // gradient positions past the 64-entry weight row — those dims
         // start from weight 0.0 (the same init as every other dim)
@@ -1321,76 +1323,102 @@ object EmbeddingQueries extends GroupBase {
     }),
   )
 
-  /** Greedy MMR loop shared shape: round 1 = pure-relevance argmax;
-    * round r scores remaining candidates against the ≤(r−1)-row
-    * broadcast selected set. The growing `sel` union is K 1-row
-    * aggregates — plan depth O(K), data motion O(K · corpus scan). */
+  /** An embedding collected to the driver as an ARRAY<FLOAT> literal
+    * (null elements kept, a null vector stays a typed null), so scoring
+    * against it is a constant-operand kernel call, not a join. */
+  private def vecLit(v: Any): Column = v match {
+    case null => lit(null).cast("array<float>")
+    case xs: scala.collection.Seq[_] =>
+      typedLit(xs.map(_.asInstanceOf[java.lang.Float]).toSeq)
+  }
+
+  /** One greedy round's argmax: the top row of `scored` by `score`
+    * (ties to the lower vec_id; a null score ranks below every number,
+    * a null vec_id below every id), over the rows whose vec_id was not
+    * picked yet. `orderBy.limit(1)` plans as TakeOrderedAndProject:
+    * per-partition top-1 heaps merged on the driver, one job, no
+    * exchange. None when no row is left. */
+  private def topPick(scored: DataFrame, score: String,
+                      picked: Seq[Row], cols: String*): Option[Row] = {
+    val ids = picked.filterNot(_.isNullAt(0)).map(_.get(0))
+    val pool =
+      if (ids.isEmpty) scored
+      else scored.filter(col("vec_id").isNull || !col("vec_id").isin(ids: _*))
+    pool.orderBy(col(score).desc, col("vec_id").asc_nulls_last).limit(1)
+      .select(cols.map(col): _*).collect().headOption
+  }
+
+  /** The K greedy rounds as a local frame, one row per round. */
+  private def pickFrame(s: SparkSession, fields: Seq[(String, DataType)],
+                        rows: Seq[Row]): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
+
+  /** Greedy MMR loop: round 1 is the pure-relevance argmax; round r
+    * scores the remaining candidates against the r−1 picks. The picks
+    * (≤K rows) ride the driver and enter the plan as literal vectors,
+    * so each round is ONE top-1 scan of the corpus: msim is `greatest`
+    * over ≤K inline float_dot cosines (order-free, nulls ignored) and
+    * picked ids leave through an `isin` filter — no join, shuffle or
+    * checkpoint per round. */
   private def mmrSelect(s: SparkSession, d: String, k: Int): DataFrame = {
     val e = t(s, d, "embeddings")
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    val cand = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
+    val qs = e.filter(col("vec_id") === 0).select("embedding").collect()
+    // one candidate row per (vector, query vector) pair: duplicate
+    // vec_id 0 rows each score the corpus, none leaves it empty
+    val cand = e.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding"),
+        explode(array(qs.map(q => vecLit(q.get(0))): _*)
+          .cast("array<array<float>>")).as("qv"))
       .select(col("vec_id"), col("embedding"),
         cosine(col("embedding"), col("qv")).as("rel"))
-    def pick(scored: DataFrame, r: Int): DataFrame =
-      scored.agg(max_by(
-        struct(col("vec_id"), col("embedding"), col("rel"), col("score")),
-        struct(col("score"), Exact.negId(col("vec_id")))).as("p"))
-        .select(lit(r).as("round"), col("p.vec_id").as("vec_id"),
-          col("p.embedding").as("embedding"), col("p.rel").as("rel"),
-          col("p.score").as("score"))
-    var sel = pick(cand.withColumn("score", col("rel")), 1)
-    for (r <- 2 to k) {
-      val sv = sel.select(col("vec_id").as("sid"), col("embedding").as("sv"))
-      // embedding rides the agg as first() (functionally dependent on
-      // vec_id) so no corpus-side re-join is needed per round
-      val scored = cand
-        .join(sel.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .crossJoin(broadcast(sv))
-        .select(col("vec_id"), col("rel"), col("embedding"),
-          cosine(col("embedding"), col("sv")).as("sim"))
-        .groupBy(col("vec_id"), col("rel"))
-        .agg(first(col("embedding")).as("embedding"),
-          max(col("sim")).as("msim"))
-        .withColumn("score",
-          lit(0.7) * col("rel") - lit(0.3) * col("msim"))
-      // sel feeds THREE consumers next round (broadcast selected set,
-      // anti-join filter, union) and its lineage contains every prior
-      // round's corpus scan — localCheckpoint truncates the <=K-row
-      // table so each round scans the corpus exactly once (the
-      // graph_domainrank lesson).
-      sel = sel.unionByName(pick(scored, r)).localCheckpoint()
+    val picks = scala.collection.mutable.ArrayBuffer.empty[Option[Row]]
+    for (_ <- 1 to k) {
+      // an empty round leaves the candidate set unchanged: every later
+      // round is empty too
+      picks += (if (picks.contains(None)) None else {
+        val sel = picks.flatten.toSeq
+        val sims = sel.map(p => cosine(col("embedding"), vecLit(p.get(1))))
+        val score =
+          if (sims.isEmpty) col("rel")
+          else lit(0.7) * col("rel") - lit(0.3) *
+            (if (sims.size == 1) sims.head else greatest(sims: _*))
+        topPick(cand.withColumn("score", score), "score", sel,
+          "vec_id", "embedding", "rel", "score")
+      })
     }
-    sel.select("round", "vec_id", "rel", "score").orderBy("round")
+    pickFrame(s, Seq("round" -> IntegerType,
+        "vec_id" -> e.schema("vec_id").dataType,
+        "rel" -> DoubleType, "score" -> DoubleType),
+      picks.toSeq.zipWithIndex.map { case (p, i) =>
+        p.fold(Row(i + 1, null, null, null))(p => Row(i + 1, p.get(0), p.get(2), p.get(3)))
+      })
   }
 
   /** Farthest-point-first loop: `mind2` = min squared L2 to the
-    * selected set (min over ≤K doubles, order-free); the seed's mind2
-    * is 0 by convention. */
+    * selected set, `least` over ≤K inline vec_d2 calls against the
+    * picks as literal vectors (order-free, nulls ignored); the seeds
+    * (every vec_id 0 row) have mind2 0 by convention. A round with an
+    * empty selected set has nothing to measure against and yields a
+    * null row; a null pick joins the set as a null vector. Same
+    * one-top-1-scan-per-round shape as mmrSelect. */
   private def kcenterSelect(s: SparkSession, d: String, k: Int): DataFrame = {
     val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    var sel = e.filter(col("vec_id") === 0)
-      .select(lit(1).as("round"), col("vec_id"), col("embedding"),
-        lit(0.0).as("mind2"))
+    val seeds = e.filter(col("vec_id") === 0).collect().toSeq
+    val sel = scala.collection.mutable.ArrayBuffer.from(seeds)
+    val out = scala.collection.mutable.ArrayBuffer.from(
+      seeds.map(p => Row(1, p.get(0), 0.0)))
     for (r <- 2 to k) {
-      val sv = sel.select(col("vec_id").as("sid"), col("embedding").as("sv"))
-      val scored = e
-        .join(sel.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .crossJoin(broadcast(sv))
-        .select(col("vec_id"), col("embedding"),
-          VectorFunctions.vd2(col("embedding"), col("sv")).as("d2"))
-        .groupBy(col("vec_id"))
-        .agg(first(col("embedding")).as("embedding"),
-          min(col("d2")).as("mind2"))
-      // same 3-consumer lineage truncation as mmrSelect
-      sel = sel.unionByName(scored.agg(max_by(
-        struct(col("vec_id"), col("embedding"), col("mind2")),
-        struct(col("mind2"), Exact.negId(col("vec_id")))).as("p"))
-        .select(lit(r).as("round"), col("p.vec_id").as("vec_id"),
-          col("p.embedding").as("embedding"), col("p.mind2").as("mind2")))
-        .localCheckpoint()
+      val p = if (sel.isEmpty) None else {
+        val d2 = sel.toSeq.map(c => VectorFunctions.vd2(col("embedding"), vecLit(c.get(1))))
+        topPick(e.withColumn("mind2", if (d2.size == 1) d2.head else least(d2: _*)),
+          "mind2", sel.toSeq, "vec_id", "embedding", "mind2")
+      }
+      sel += p.getOrElse(Row(null, null))
+      out += p.fold(Row(r, null, null))(p => Row(r, p.get(0), p.get(2)))
     }
-    sel.select("round", "vec_id", "mind2").orderBy("round")
+    pickFrame(s, Seq("round" -> IntegerType,
+      "vec_id" -> e.schema("vec_id").dataType, "mind2" -> DoubleType), out.toSeq)
   }
 
   /** Brute-force cosine top-5 for query vectors vec_id < 10 (shared by
@@ -2074,8 +2102,8 @@ object EmbeddingQueries extends GroupBase {
     // greedy rounds unrolled as CTEs (the emb_kmeans convention):
     // p_r = round-r pick, c_r = remaining candidates rescored against
     // the picks so far. greatest()/least() over the per-pick scores
-    // mirror the Spark side's max/min aggs — identical doubles in,
-    // order-free combine, identical doubles out.
+    // mirror the Spark side's — identical doubles in, order-free
+    // combine, identical doubles out.
     "emb_mmr" -> {
       def cosSql(a: String, b: String): String =
         s"${dotSql(a, b)} / (${normSql(a)} * ${normSql(b)})"

@@ -59,6 +59,23 @@ object GraphQueries extends GroupBase {
     (nodes, edges)
   }
 
+  /** The node spine of the propagation loops (graph_cc, graph_bfs):
+    * one row per documents row, null and duplicate ids included. Their
+    * rounds each read the previous round once and key their minimum by
+    * node id, so the static plan grows linearly with the round count;
+    * only the last round goes back onto the spine (`onSpine`). */
+  private def nodeSpine(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").select(col("doc_id"))
+
+  /** `perNode` (keyed by a unique doc_id) left-joined onto the spine:
+    * one output row per documents row, the row multiplicity the loops
+    * have always emitted (a duplicate id repeats its value, a null id
+    * gets null). */
+  private def onSpine(spine: DataFrame, perNode: DataFrame): DataFrame = {
+    val v = perNode.withColumnRenamed("doc_id", "node")
+    spine.join(v, col("doc_id") === col("node"), "left").drop("node")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // PageRank (d=0.85), 3 unrolled power-iteration rounds from the
     // uniform vector, with dangling-mass redistribution: pages with no
@@ -258,22 +275,26 @@ object GraphQueries extends GroupBase {
     // unreached nodes stay NULL (identically in both engines).
     // Integer distances: no rounding anywhere.
     "graph_bfs" -> ((s, d) => {
-      val (nodes, edges) = graph(s, d)
-      var dist = nodes.select(col("doc_id"),
+      val (_, edges) = graph(s, d)
+      val spine = nodeSpine(s, d)
+      // weight-0 self-loops carry each node's own distance through the
+      // same min as its in-edges, so a round reads the previous
+      // distances once
+      val hops = edges.select(col("src"), col("dst"), lit(1).as("w"))
+        .unionByName(spine.select(col("doc_id").as("src"),
+          col("doc_id").as("dst"), lit(0).as("w")))
+      var dist = spine.select(col("doc_id"),
         when(col("doc_id") < 10, 0).otherwise(lit(null).cast("int"))
           .as("dist"))
-      for (_ <- 1 to 3) {
-        val push = edges.join(dist.filter(col("dist").isNotNull),
-            edges("src") === dist("doc_id"))
-          .groupBy(col("dst")).agg((min(col("dist")) + 1).as("nd"))
-        dist = dist.join(push, dist("doc_id") === push("dst"), "left")
-          .select(dist("doc_id"),
-            when(col("nd").isNull, col("dist"))
-              .when(col("dist").isNull, col("nd"))
-              .otherwise(least(col("dist"), col("nd"))).as("dist"))
-      }
-      dist.select(col("doc_id"), col("dist"),
-          col("dist").isNotNull.as("reached"))
+      // a hop target that is no node (dirty ids) gets a distance but
+      // has no hops out, so it relaxes nothing; onSpine drops it
+      for (_ <- 1 to 3)
+        dist = hops.join(dist.filter(col("dist").isNotNull),
+            col("src") === col("doc_id"))
+          .groupBy(col("dst").as("doc_id"))
+          .agg(min(col("dist") + col("w")).as("dist"))
+      onSpine(spine, dist)
+        .select(col("doc_id"), col("dist"), col("dist").isNotNull.as("reached"))
         .orderBy("doc_id")
     }),
 
@@ -376,19 +397,24 @@ object GraphQueries extends GroupBase {
     }),
 
     "graph_cc" -> ((s, d) => {
-      val (nodes, edges) = graph(s, d)
-      val und = edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      var labels = nodes.select(col("doc_id"), col("doc_id").as("comp"))
-      for (_ <- 1 to 3) {
-        val nbr = und.join(labels, und("dst") === labels("doc_id"))
-          .groupBy(col("src")).agg(min(col("comp")).as("ncomp"))
-        labels = labels.join(nbr, labels("doc_id") === nbr("src"), "left")
-          .select(col("doc_id"),
-            least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
-      }
-      labels.orderBy("doc_id")
+      val (_, edges) = graph(s, d)
+      val spine = nodeSpine(s, d)
+      // the edges between nodes (an edge into an id that is no node,
+      // possible on dirty ids, carries no label) in both directions,
+      // plus a self-loop per node: a node's own label meets its
+      // neighbors' in one min, so a round reads the previous labels
+      // once and yields exactly one label per node (min is idempotent:
+      // duplicate edges need no distinct)
+      val fwd = edges.select(col("src"), col("dst"))
+        .join(spine, col("dst") === col("doc_id"), "left_semi")
+      val nbrs = fwd
+        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+        .unionByName(spine.select(col("doc_id").as("src"), col("doc_id").as("dst")))
+      var labels = spine.select(col("doc_id"), col("doc_id").as("comp"))
+      for (_ <- 1 to 3)
+        labels = nbrs.join(labels, col("dst") === col("doc_id"))
+          .groupBy(col("src").as("doc_id")).agg(min(col("comp")).as("comp"))
+      onSpine(spine, labels).orderBy("doc_id")
     }),
 
     // COMMUNITY detection by synchronous label propagation (LPA) —

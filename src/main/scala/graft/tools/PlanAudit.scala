@@ -45,8 +45,6 @@ object PlanAudit {
     "text_ks",         // triangular <= join over the bounded length histogram
     "agg_auc",         // same triangular <= join, score histogram is bounded
     "text_chi2",       // 1-row grand-total broadcast onto the R x C cells
-    "emb_mmr",         // <=K-row selected-set broadcast per greedy round
-    "emb_kcenter",     // same bounded selected-set broadcast, vd2 scoring
     "pipe_gate",       // composes emb_semdedup -> inherits its centroid broadcast
     "emb_rq",          // 4-row codebook broadcasts per level, corpus streams
     "emb_matryoshka",  // brute probe-vector broadcasts per truncation arm

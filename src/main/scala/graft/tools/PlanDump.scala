@@ -74,8 +74,8 @@ object PlanDump {
     "emb_purity" -> "purity/NMI eval: one assignment pass, bounded contingency arithmetic",
     "pipe_spancorrupt" -> "span corruption: one span_corrupt codegen kernel call per row behind a Generate barrier, single scan",
     "dd_cdc" -> "content-defined chunking: one cdc_chunks codegen kernel call per row, then the dd_chunk keeper shape (two hash-aggs, no window)",
-    "emb_mmr" -> "MMR selection: K greedy rounds, <=K-row selected-set broadcasts, max_by argmax (no sort)",
-    "emb_kcenter" -> "k-center coreset: same bounded-round shape, codegen vec_d2 scoring",
+    "emb_mmr" -> "MMR selection: K greedy rounds, each one top-1 TakeOrderedAndProject scan scoring against the <=K picks as literal vectors (no join, no exchange)",
+    "emb_kcenter" -> "k-center coreset: same one-scan-per-round shape, least() over inline codegen vec_d2 calls",
     "tw_rollup" -> "cascading rollup: hour level re-aggregates minute partials, raw table scanned once",
     "pipe_classify_train" -> "logistic-GD training: one corpus scan per round into a 4-number fsum gradient agg, weight row broadcast",
     "text_rrf" -> "RRF hybrid retrieval: both top-50 lists via TakeOrderedAndProject heaps, rank windows on bounded lists only",
@@ -93,7 +93,7 @@ object PlanDump {
     "pipe_unimax" -> "UniMax water-filling: corpus collapses to the L-row source hash-agg; sort/prefix/level windows all on the L-row table",
     "emb_decontam" -> "embedding decontamination: benchmark side broadcasts, corpus streams through float_dot, max_by argmax (no window)",
     "emb_probe" -> "linear probe: one corpus scan per GD step, 64 fsum gradient partials, dim-bounded weight re-assembly broadcasts",
-    "graph_bfs" -> "multi-source BFS: per round one src-keyed frontier join + dst-keyed min hash-agg, distances never on the driver",
+    "graph_bfs" -> "multi-source BFS: per round one src-keyed join of the self-looped edges against the previous distances + dst-keyed min hash-agg, one left join onto the node spine at the end; distances never on the driver",
     "tw_tsim" -> "time-series correlation: corpus collapses to the (type, hour) count grid; pair join + integer sufficient statistics on the span-bounded grid",
     "tw_motif" -> "matrix-profile motif: span-sized series (one hash-agg), span^2-bounded window pair join — SF-independent after the first aggregate",
     "tw_acf" -> "autocorrelation: one (hour) hash-agg, 48-lag self-join on the span grid, integer sufficient statistics",

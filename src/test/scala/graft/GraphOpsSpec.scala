@@ -16,16 +16,22 @@ class GraphOpsSpec extends SparkSpec {
   /** n docs with ids 0..n-1 (the graph queries' modulo targets need
     * contiguity, which the driver's generator also guarantees). */
   private def writeDocs(seed: Long, n: Int,
+      lang: Int => String = _ => "en"): (String, Vector[Vector[String]]) =
+    writeDocIds(seed, cleanIds(n), lang)
+
+  /** One documents row per entry of `ids`, in order (a None is a null
+    * doc_id). */
+  private def writeDocIds(seed: Long, ids: Seq[Option[Long]],
       lang: Int => String = _ => "en"): (String, Vector[Vector[String]]) = {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(seed)
-    val docs = Vector.fill(n) {
+    val docs = Vector.fill(ids.size) {
       Vector.fill(3 + rnd.nextInt(28))(vocab(rnd.nextInt(vocab.size)))
     }
     val dir = TestSpark.tempDir(s"graft-graph$seed")
-    docs.zipWithIndex
-      .map { case (tk, i) => (i.toLong, tk.mkString(" "), lang(i), "srcG", 1L) }
+    docs.zip(ids).zipWithIndex
+      .map { case ((tk, id), i) => (id, tk.mkString(" "), lang(i), "srcG", 1L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
     (dir, docs)
@@ -34,10 +40,60 @@ class GraphOpsSpec extends SparkSpec {
   /** The query's edge rule, brute-forced: hub + 3 modulo links,
     * self-loops dropped, duplicates collapsed, % 7 == 0 dangling. */
   private def outlinks(n: Int): Map[Int, Seq[Int]] =
-    (0 until n).filter(_ % 7 != 0).map { s =>
-      s -> (Seq(s % 10) ++ (1 to 3).map(j => (s * 31 + j * 17) % n))
+    outlinksOf((0 until n).map(_.toLong), n)
+      .map { case (s, ts) => s.toInt -> ts.map(_.toInt) }
+
+  /** The same rule over arbitrary (non-negative) node ids, with `n` the
+    * documents row count: a target need not be a node. */
+  private def outlinksOf(nodes: Seq[Long], n: Long): Map[Long, Seq[Long]] =
+    nodes.filter(_ % 7 != 0).map { s =>
+      s -> (Seq(s % 10) ++ (1 to 3).map(j => (s % n * 31 + j * 17) % n))
         .filter(_ != s).distinct
     }.toMap
+
+  private def cleanIds(n: Int): Seq[Option[Long]] = (0 until n).map(i => Some(i.toLong))
+
+  /** 45 documents rows: ids 0-39, with 3 and 17 repeated and two null
+    * ids. The 45-row modulus also sends edges to ids 40-44, which are
+    * no nodes and so carry nothing. */
+  private val dirtyIds: Seq[Option[Long]] =
+    cleanIds(40) ++ Seq(Some(3L), None, Some(17L), Some(3L), None)
+
+  private def multiset[A](xs: Seq[A]): Map[A, Int] =
+    xs.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** graph_cc's 3 rounds of min-label propagation over the documents
+    * rows `ids`: a node takes the least label among itself and its
+    * neighbours in either edge direction that are nodes. One output
+    * per row: duplicates repeat, a null id has a null label. */
+  private def ccModel(ids: Seq[Option[Long]]): Seq[(Option[Long], Option[Long])] = {
+    val nodes = ids.flatten.distinct
+    val und = outlinksOf(nodes, ids.size).toSeq
+      .flatMap { case (s, ts) => ts.flatMap(t => Seq(s -> t, t -> s)) }
+      .filter { case (_, t) => nodes.contains(t) }
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    var lbl = nodes.map(v => v -> v).toMap
+    for (_ <- 1 to 3)
+      lbl = nodes.map(v => v -> (lbl(v) +: und.getOrElse(v, Nil).map(lbl)).min).toMap
+    ids.map(i => i -> i.map(lbl))
+  }
+
+  /** graph_bfs's 3 min-plus rounds from the seeds doc_id < 10 over the
+    * directed edges between nodes; unreached stays None. One output per
+    * row, as in ccModel. */
+  private def bfsModel(ids: Seq[Option[Long]]): Seq[(Option[Long], Option[Int])] = {
+    val nodes = ids.flatten.distinct
+    val in = outlinksOf(nodes, ids.size).toSeq
+      .flatMap { case (s, ts) => ts.map(_ -> s) }
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    var dist = nodes.map(v => v -> (if (v < 10) Some(0) else None)).toMap
+    for (_ <- 1 to 3)
+      dist = nodes.map { v =>
+        v -> (dist(v).toSeq ++ in.getOrElse(v, Nil).flatMap(dist(_)).map(_ + 1))
+          .minOption
+      }.toMap
+    ids.map(i => i -> i.flatMap(dist))
+  }
 
   test("graph_kcore and graph_ppr fail fast without exchange reuse, and build without AQE") {
     def withConf[A](key: String)(body: => A): A = {
@@ -103,24 +159,34 @@ class GraphOpsSpec extends SparkSpec {
   test("graph_cc matches brute-force 3-round min-label propagation") {
     val n = 40
     val (dir, _) = writeDocs(13L, n)
-    val und = outlinks(n).toSeq
-      .flatMap { case (s, ts) => ts.flatMap(t => Seq(s -> t, t -> s)) }
-      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).distinct }
-    var lbl = Array.tabulate(n)(identity)
-    for (_ <- 1 to 3) {
-      val nxt = Array.tabulate(n) { v =>
-        (lbl(v) +: und.getOrElse(v, Seq.empty).map(lbl(_))).min
-      }
-      lbl = nxt
-    }
+    val lbl = ccModel(cleanIds(n)).map { case (v, l) => v.get -> l.get }.toMap
     val got = SparkEntry.queries("graph_cc")(spark, dir).collect()
-      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n)
-    (0 until n).foreach(v => assert(got(v) == lbl(v), s"node $v"))
+    (0L until n).foreach(v => assert(got(v) == lbl(v), s"node $v"))
     // min-label is monotone: a label never exceeds the node's own id
-    (0 until n).foreach(v => assert(got(v) <= v))
+    (0L until n).foreach(v => assert(got(v) <= v))
     // the hub structure actually merges something
-    assert(lbl.distinct.length < n)
+    assert(lbl.values.toSet.size < n)
+    // duplicate and null ids: every documents row comes back once
+    val (dirty, _) = writeDocIds(15L, dirtyIds)
+    val rows = SparkEntry.queries("graph_cc")(spark, dirty).collect().toSeq
+      .map(r => (Option(r.getAs[java.lang.Long](0)).map(_.toLong),
+        Option(r.getAs[java.lang.Long](1)).map(_.toLong)))
+    assert(multiset(rows) == multiset(ccModel(dirtyIds)))
+  }
+
+  test("graph_bfs matches brute-force 3-round min-plus relaxation") {
+    for ((seed, ids) <- Seq(14L -> cleanIds(40), 15L -> dirtyIds)) {
+      val (dir, _) = writeDocIds(seed, ids)
+      val got = SparkEntry.queries("graph_bfs")(spark, dir).collect().toSeq
+        .map(r => (Option(r.getAs[java.lang.Long](0)).map(_.toLong),
+          Option(r.getAs[java.lang.Integer](1)).map(_.toInt), r.getBoolean(2)))
+      assert(multiset(got.map(r => (r._1, r._2))) == multiset(bfsModel(ids)), s"seed $seed")
+      assert(got.forall(r => r._3 == r._2.nonEmpty), s"seed $seed")
+    }
+    // the rounds relax past the seeds' direct neighbours
+    assert(bfsModel(cleanIds(40)).exists(_._2.exists(_ >= 2)))
   }
 
   test("graph_hits matches a brute-force 2-round L1-normalized HITS") {
