@@ -238,13 +238,21 @@ object SeqPattern {
   case class CepBuf(pending: List[KeyedEvent], partials: List[Partial])
 
   /** Event-time-ORDERED pattern detection: events buffer per key until
-    * the watermark passes their timestamp, then feed the NFA in
-    * (ts, value) order — so out-of-order arrival ACROSS micro-batches
-    * cannot corrupt contiguity, WITHIN horizons, or aggregate DEFINE
-    * prefixes (plain `detect` replays each batch in arrival order,
-    * which is only correct for in-order streams). This is the
-    * reference CEP library's event-time contract (NFA consumes by
-    * event time, buffering out-of-order rows until the watermark).
+    * they are final, then feed the NFA in (ts, value) order — so
+    * out-of-order arrival ACROSS micro-batches cannot corrupt
+    * contiguity, WITHIN horizons, or aggregate DEFINE prefixes (plain
+    * `detect` replays each batch in arrival order, which is only
+    * correct for in-order streams). This is the reference CEP library's
+    * event-time contract (NFA consumes by event time, buffering
+    * out-of-order rows until the watermark).
+    *
+    * An event is final once the watermark passes it or, when the input
+    * has a single `withWatermark("ts", D)`, once an event of its key
+    * at least D later has arrived (`Finality`). A match thus emits in
+    * the trigger that brings such an event, instead of waiting one
+    * more trigger for the watermark. A row at or before its key's
+    * horizon (D behind the key's newest event of an earlier trigger)
+    * is dropped as late.
     *
     * Requires `withWatermark(...)` on the input; rows later than the
     * watermark are dropped upstream by Spark (the accepted late-data
@@ -261,6 +269,7 @@ object SeqPattern {
                     greedy: Boolean = true): Dataset[MatchOut] = {
     import ds.sparkSession.implicits._
     val stepsB = expand(steps)
+    val fin = Finality.of(ds)
     // EventTimeTimeout, not NoTimeout: flatMapGroupsWithState only
     // invokes the function for keys PRESENT in a batch, so without a
     // timer a quiet key's buffered events would never mature and its
@@ -274,14 +283,13 @@ object SeqPattern {
         case (key, events, state: GroupState[CepBuf]) =>
           val st = state.getOption.getOrElse(CepBuf(Nil, Nil))
           val wmMs = state.getCurrentWatermarkMs()
-          val (mature, pending) =
-            (st.pending ++ events).partition(_.ts.getTime <= wmMs)
+          val (mature, pending, cutUs) = fin.release(st.pending, events, wmMs)
           val nfa = new Nfa(key, stepsB, withinMs, strict, skip, greedy)
           nfa.partials = st.partials
           mature.sortBy(e => (micros(e.ts), e.value)).foreach(nfa.step)
-          // quiet-key expiry: partials whose horizon the watermark has
-          // passed emit their final extent now, not at the next event
-          nfa.expire(wmMs * 1000L)
+          // quiet-key expiry: partials whose horizon the cut has passed
+          // emit their final extent now, not at the next event
+          nfa.expire(cutUs)
           if (pending.isEmpty && nfa.partials.isEmpty) state.remove()
           else {
             state.update(CepBuf(pending, nfa.partials))
@@ -374,8 +382,8 @@ object SeqPattern {
       * distinct middle rows are distinct matches, not extent variants
       * of one match (same-rows duplicates are collapsed by `seen`);
       * shorter siblings are the extent variants greedy suppresses.
-      * Called by step() for every event, and by detectOrdered at the
-      * watermark frontier so a QUIET key's matches still emit. */
+      * Called by step() for every event, and by detectOrdered at its
+      * release cut so a QUIET key's matches still emit. */
     def expire(tUs: Long): Unit = {
       val (kept, expired) = partials.partition(p => tUs - p.tss.head <= withinUs)
       if (greedy && expired.nonEmpty) {

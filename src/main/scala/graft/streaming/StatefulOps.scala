@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.streaming.SeqPattern.micros
 
 /** Keyed event shape shared by the stateful operators (mirrors the
   * reference's keyed DataStream element: key + event time + tag +
@@ -233,9 +234,13 @@ object StatefulOps {
   /** EVENT-time temporal/as-of join, streaming flavor
     * (TableSQLFunc.scala:1223-1341 temporal table function join): facts
     * match the dim value valid AT THEIR EVENT TIME, not the latest
-    * seen. Both sides buffer per key until the watermark passes their
-    * timestamp, then flush in event-time order — dim rows update the
-    * rate, fact rows emit with the rate in force. Buffer size is
+    * seen. Both sides buffer per key until their timestamp is final
+    * (the watermark or the key's `Finality` horizon passes it), then
+    * flush in event-time order — dim rows update the rate, fact rows
+    * emit with the rate in force. The buffer keeps millisecond
+    * timestamps, so a millisecond flushes only once all of it is at
+    * or before the release cut: a row in the same millisecond can
+    * still arrive until then. Buffer size is
     * bounded by the watermark delay (state ∝ in-flight horizon, the
     * same bound Flink's temporal join keeps); an event-time timer
     * flushes the tail when one side goes quiet.
@@ -244,16 +249,22 @@ object StatefulOps {
   def eventTimeAsOfJoin(ds: Dataset[KeyedEvent], dimKind: String)
       : Dataset[AlertOut] = {
     import ds.sparkSession.implicits._
+    val fin = Finality.of(ds)
     ds.groupByKey(_.key)
       .flatMapGroupsWithState[AsOfState, AlertOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         case (key, events, state: GroupState[AsOfState]) =>
           val st = state.getOption.getOrElse(AsOfState(Nil, Double.NaN, false))
-          val incoming = events.map(e =>
+          // the buffer keeps milliseconds, which is all the horizon
+          // reads of the newest event: it floors it to its millisecond
+          val lateUs = fin.lateUs(st.buf.map(_.ts * 1000L).maxOption)
+          val incoming = events.filter(e => micros(e.ts) > lateUs).map(e =>
             AsOfBuf(e.ts.getTime, e.kind == dimKind, e.value, e.kind)).toList
           val wm = state.getCurrentWatermarkMs()
           val all = (st.buf ++ incoming).sortBy(b => (b.ts, !b.isDim, b.value))
-          val (ripe, young) = all.partition(_.ts <= wm)
+          val cutUs = fin.cutUs(wm, all.map(_.ts * 1000L).maxOption)
+          // a millisecond is final once its last microsecond is
+          val (ripe, young) = all.partition(_.ts * 1000L + 999L <= cutUs)
           var rate = st.rate
           var hasRate = st.hasRate
           val out = scala.collection.mutable.ArrayBuffer.empty[AlertOut]
@@ -486,31 +497,33 @@ object StatefulOps {
     * stage completes for a user.
     *
     * Correct under bounded out-of-order delivery: events are BUFFERED
-    * per user until the watermark passes them, then folded in event-
-    * time order (stage priority breaks exact ts ties so an s2 at
-    * exactly t1 still counts, matching the batch `>=`). Updating the
+    * per user until they are final (the watermark passes them, or the
+    * user's `Finality` horizon does, as in `SeqPattern.detectOrdered`),
+    * then folded in µs event-time order (stage priority breaks exact
+    * ts ties so an s2 at exactly t1 still counts, matching the batch
+    * `>=`). Updating the
     * stage marks incrementally WITHOUT the buffer would be wrong — a
     * late s1 arriving below an already-recorded t1 could enable an
     * earlier s2 that was already discarded. Permanent state is 3
     * longs per user (the reference's ValueState shape); the pending
-    * buffer drains to the watermark every batch, and the event-time
+    * buffer drains to the release cut every batch, and the event-time
     * timer matures a quiet user's buffer without further traffic. */
   def funnelTrack(ds: Dataset[KeyedEvent], s1: String, s2: String,
                   s3: String): Dataset[FunnelOut] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val prio = Map(s1 -> 0, s2 -> 1, s3 -> 2).withDefaultValue(3)
+    val fin = Finality.of(ds)
     ds.groupByKey(_.key)
       .flatMapGroupsWithState[FunnelState, FunnelOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         case (key, events, state: GroupState[FunnelState]) =>
           val st = state.getOption.getOrElse(FunnelState(Nil, -1L, -1L, -1L))
           val wm = state.getCurrentWatermarkMs()
-          val all = st.pending ++ events.toSeq
-          val (mature, pending) = all.partition(_.ts.getTime <= wm)
+          val (mature, pending, _) = fin.release(st.pending, events, wm)
           var (t1, t2, t3) = (st.t1, st.t2, st.t3)
           val out = scala.collection.mutable.ArrayBuffer.empty[FunnelOut]
-          mature.sortBy(e => (e.ts.getTime, prio(e.kind), e.value))
+          mature.sortBy(e => (micros(e.ts), prio(e.kind), e.value))
             .foreach { e =>
               if (t1 < 0 && e.kind == s1) {
                 t1 = e.ts.getTime; out += FunnelOut(key, 1, e.ts)
