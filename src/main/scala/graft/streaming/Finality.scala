@@ -8,7 +8,8 @@ import graft.streaming.SeqPattern.micros
   * (`SeqPattern.detectOrdered`, `StatefulOps.funnelTrack`,
   * `StatefulOps.eventTimeAsOfJoin`). Each buffers a key's events and
   * consumes them in event-time order once no earlier event of the key
-  * can still reach it.
+  * can still reach it. `StreamPipelines.clickCount` closes a page's
+  * windows by the same cut.
   *
   * The watermark alone proves that one trigger late. Trigger N ends by
   * computing W = (max event time seen) - D. Trigger N+1 runs with W as
@@ -37,9 +38,10 @@ import graft.streaming.SeqPattern.micros
   *
   * D must bound every input row, so the horizon is on only when all
   * rows pass through exactly one `withWatermark` whose event-time
-  * column is the `ts` column itself (same attribute) and whose delay is
-  * at least 1 ms. Otherwise `delayMs` is None and the operators keep
-  * the global rule: release at the watermark, no extra late drop. */
+  * column is the event-time column itself (same attribute; `ts` unless
+  * the operator names another) and whose delay is at least 1 ms.
+  * Otherwise `delayMs` is None and the operators keep the global rule:
+  * release at the watermark, no extra late drop. */
 private[streaming] final case class Finality(delayMs: Option[Long]) {
   /** Rows of the key at or before this µs instant are final: with the
     * key's newest buffered event at `maxUs` (None: nothing buffered),
@@ -67,9 +69,9 @@ private[streaming] final case class Finality(delayMs: Option[Long]) {
 }
 
 private[streaming] object Finality {
-  def of(ds: Dataset[_]): Finality = {
+  def of(ds: Dataset[_], tsCol: String = "ts"): Finality = {
     val plan = ds.queryExecution.analyzed
-    val ts = plan.output.filter(_.name.equalsIgnoreCase("ts"))
+    val ts = plan.output.filter(_.name.equalsIgnoreCase(tsCol))
     val delay = plan.collect { case w: EventTimeWatermark => w } match {
       case Seq(w) if ts.size == 1 && ts.head.exprId == w.eventTime.exprId &&
           w.child.collectLeaves().size == plan.collectLeaves().size =>

@@ -30,7 +30,29 @@ object TestSpark {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
+    // every streaming query start logs that AQE is off (it always is in
+    // streaming) and every query without a checkpointLocation that a
+    // temporary one was made; the other WARNs of these loggers stay
+    quiet("org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+      "spark\\.sql\\.adaptive\\.enabled is not supported in streaming .*|" +
+        "Temporary checkpoint location created .*")
+    quiet("org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
+      "Disabling AQE since AQE is not supported .*")
     sess
+  }
+
+  /** Drops `logger`'s events whose whole message matches `messages`. */
+  private def quiet(logger: String, messages: String): Unit = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.config.Configurator
+    import org.apache.logging.log4j.core.filter.RegexFilter
+    // a logger config of its own at its current level, to carry the filter
+    Configurator.setLevel(logger, LogManager.getLogger(logger).getLevel)
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getLoggerConfig(logger).addFilter(RegexFilter.createFilter(
+      s"(?s)(?:$messages)", null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+    ctx.updateLoggers()
   }
 
   /** A fresh directory under the system temp dir, deleted with its

@@ -72,6 +72,19 @@ class FinalitySpec extends SparkSpec {
     assert(delay(src) == None)
   }
 
+  test("the horizon reads the named event-time column") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    def src = MemoryStream[KeyedEvent].toDF().withColumnRenamed("ts", "at")
+    assert(Finality.of(src.withWatermark("at", "200 milliseconds"), "at").delayMs == Some(200L))
+    // the default column is ts, which this input does not have
+    assert(Finality.of(src.withWatermark("at", "200 milliseconds")).delayMs == None)
+    // a second watermark on the input
+    assert(Finality.of(src.withWatermark("at", "1 second")
+      .withWatermark("at", "200 milliseconds"), "at").delayMs == None)
+  }
+
   test("detectOrdered: a match emits in the trigger that completes it when " +
     "the key has an event past the delay") {
     // one batch: A-B-C, then an event 7 s later (delay 5 s). The
